@@ -1,6 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 
 /** File-level zone maps (data skipping) for partitioned parquet roots.
@@ -686,11 +689,13 @@ object FileStats {
     // empty). If that is ever violated (crashed compaction, hand-
     // rolled leaf), the pin would name a nonexistent part=/gen= leaf
     // and every later readSnapshotAt would fail at planning with an
-    // undiagnosable path error — so verify the leaf directories exist
-    // NOW, while the violated invariant is still attributable.
-    val sideRoot = new java.io.File(Versioned.snapshotRoot(dir, sidePrefix))
+    // undiagnosable path error — so verify the leaves hold data files
+    // NOW, while the violated invariant is still attributable. Listed
+    // through the Hadoop FileSystem, so the check holds on any store.
+    val sideRoot = Versioned.snapshotRoot(dir, sidePrefix)
+    val conf = GraftShim.hadoopConf(stats.sparkSession)
     val missing = present.map(_.toString).filterNot(v =>
-      new java.io.File(sideRoot, s"part=$v/__gen=$gen").isDirectory)
+      Versioned.leafFiles(conf, sideRoot, "part", v, gen).exists(_.nonEmpty))
     require(missing.isEmpty,
       s"sidecar '$sidePrefix'@$gen: no stats rows written for pinned " +
         s"touched partition(s) ${missing.toSeq.sorted.mkString(", ")} — " +
@@ -700,6 +705,131 @@ object FileStats {
     // partition value (`part`), so pins must be string-keyed like the
     // previous present-detection returned them
     present.map(_.toString)
+  }
+
+  // ---- cached sidecar rows (snapshot-lane candidate planning) ----------
+  // Sidecar generations are immutable once written, so the rows of a
+  // pinned sidecar file never change under its (path, length, mtime):
+  // candidate planning reads them once and then plans every later read
+  // on the driver. The pinned leaves are listed through the Hadoop
+  // FileSystem; a file whose (path, length, mtime) is not cached — new
+  // generation, compaction, or a file replaced in place — is loaded,
+  // all misses together in one job labelled `filestats.sidecarLoad`.
+  // The engine never rewrites a sidecar file under its own name (a
+  // replayed publish writes new file names), so only a hand-made
+  // replacement of equal length within the store's mtime granularity
+  // could alias a cached entry. The planning frame over the cached rows is a LocalRelation, so the
+  // filters the callers apply run on the driver (ConvertToLocalRelation)
+  // and collect without a job. A selection whose files would not fit
+  // the cache plans through the distributed read instead (the bloom
+  // probe then stays in executors, the driver-OOM guard of
+  // [[bloomCandidateFrame]]).
+
+  /** LRU bound of the sidecar row cache, in estimated heap bytes. */
+  private val SidecarCacheMaxBytes: Long = 64L << 20
+
+  private final case class SidecarRows(schema: StructType, rows: Array[Row],
+                                       bytes: Long)
+
+  private object SidecarCache {
+    private var used = 0L
+    private val entries = new java.util.LinkedHashMap[(String, Long, Long),
+      SidecarRows](16, 0.75f, true)
+
+    def key(st: FileStatus): (String, Long, Long) =
+      (st.getPath.toString, st.getLen, st.getModificationTime)
+
+    def get(st: FileStatus): Option[SidecarRows] = synchronized {
+      Option(entries.get(key(st)))
+    }
+
+    def put(st: FileStatus, e: SidecarRows): Unit = synchronized {
+      Option(entries.put(key(st), e)).foreach(old => used -= old.bytes)
+      used += e.bytes
+      val it = entries.values.iterator
+      while (used > SidecarCacheMaxBytes && it.hasNext) {
+        used -= it.next().bytes
+        it.remove()
+      }
+    }
+  }
+
+  /** Rough heap footprint of one cached row. */
+  private def rowBytes(r: Row): Long =
+    r.toSeq.foldLeft(64L) {
+      case (acc, b: Array[Byte]) => acc + 16 + b.length
+      case (acc, s: String) => acc + 40 + 2L * s.length
+      case (acc, _) => acc + 16
+    }
+
+  /** Load the rows of `files` (all missing from the cache) in one job
+    * per distinct footer schema — one in practice, since a sidecar's
+    * generations share its build's schema. Refuses (false) when the
+    * files' uncompressed bytes exceed the cache bound.
+    */
+  private def loadSidecarRows(spark: SparkSession, conf: Configuration,
+                              sidePrefix: String,
+                              files: Seq[FileStatus]): Boolean = {
+    val footers = files.map(f => f -> GraftShim.parquetFooter(spark, conf, f))
+    if (footers.map(_._2._2).sum > SidecarCacheMaxBytes) return false
+    graft.core.Jobs.describe(spark,
+      s"filestats.sidecarLoad $sidePrefix (${files.size} files)") {
+      footers.groupBy(_._2._1).foreach { case (schema, group) =>
+        val sts = group.map(_._1)
+        def norm(p: String) = new Path(new java.net.URI(p)).toUri.getPath
+        val byFile = spark.read.schema(schema)
+          .parquet(sts.map(_.getPath.toString): _*)
+          .withColumn("__src", input_file_name()).collect()
+          .groupBy(r => norm(r.getString(r.length - 1)))
+        sts.foreach { st =>
+          val rows = byFile.getOrElse(norm(st.getPath.toString), Array.empty)
+            .map(r => Row.fromSeq(r.toSeq.init))
+          SidecarCache.put(st, SidecarRows(schema, rows,
+            rows.map(rowBytes).sum))
+        }
+      }
+    }
+    true
+  }
+
+  /** The rows of the `sidePrefix` sidecar generations `sel` pins, as a
+    * driver-local frame from the cache — None when a leaf is not
+    * listable, the selection does not fit the cache, or its files
+    * disagree on schema (the caller then reads them distributed).
+    */
+  private def cachedSidecar(spark: SparkSession, dir: String,
+                            sidePrefix: String,
+                            sel: Map[String, String]): Option[DataFrame] = {
+    val conf = GraftShim.hadoopConf(spark)
+    val root = Versioned.snapshotRoot(dir, sidePrefix)
+    val leaves = sel.toSeq.sorted.map { case (v, g) =>
+      Versioned.leafFiles(conf, root, "part", v, g) }
+    if (leaves.exists(_.isEmpty)) return None
+    val files = leaves.flatten.flatten
+    val missing = files.filter(SidecarCache.get(_).isEmpty)
+    if (missing.nonEmpty && !loadSidecarRows(spark, conf, sidePrefix, missing))
+      return None
+    val got = files.map(SidecarCache.get)
+    val schemas = got.flatten.map(_.schema).distinct
+    if (got.exists(_.isEmpty) || schemas.size != 1) None
+    else {
+      import scala.jdk.CollectionConverters._
+      Some(spark.createDataFrame(got.flatten.flatMap(_.rows).asJava,
+        schemas.head))
+    }
+  }
+
+  /** A sidecar's rows at explicit pins, restricted to `parts`, for
+    * candidate planning: the cached driver-local frame when it applies,
+    * else the pinned distributed read.
+    */
+  private def pinnedSidecar(spark: SparkSession, dir: String,
+                            sidePrefix: String, pins: Map[String, String],
+                            parts: Option[Seq[Any]]): DataFrame = {
+    val want = parts.map(_.map(_.toString))
+    val sel = want.fold(pins)(vs => pins.filter(p => vs.contains(p._1)))
+    cachedSidecar(spark, dir, sidePrefix, sel).getOrElse(
+      Versioned.readSnapshotAt(spark, dir, sidePrefix, "part", pins, want))
   }
 
   /** [[candidateFiles]] resolved through the newest manifest's sidecar
@@ -724,8 +854,8 @@ object FileStats {
                        lo: Option[Any], hi: Option[Any],
                        parts: Option[Seq[Any]] = None): Seq[String] =
     zoneCandidates(
-      Versioned.readSnapshotAt(spark, dir, sidecarPrefix(dataPrefix),
-        "part", sidecarPins, parts.map(_.map(_.toString))),
+      pinnedSidecar(spark, dir, sidecarPrefix(dataPrefix), sidecarPins,
+        parts),
       lo, hi)
 
   /** Data-skipping read over a snapshot root, planned entirely from
@@ -905,8 +1035,8 @@ object FileStats {
                             preds: Seq[(String, Option[Any], Option[Any])],
                             parts: Option[Seq[Any]] = None): Seq[String] = {
     require(preds.nonEmpty, "need at least one column predicate")
-    Versioned.readSnapshotAt(spark, dir, sidecarMultiPrefix(dataPrefix),
-        "part", sidecarPins, parts.map(_.map(_.toString)))
+    pinnedSidecar(spark, dir, sidecarMultiPrefix(dataPrefix), sidecarPins,
+        parts)
       .filter(multiKeep(preds)).select(col("file"))
       .collect().map(_.getString(0)).toSeq.sorted
   }
@@ -1094,8 +1224,7 @@ object FileStats {
                             bloomPins: Map[String, String], value: Any,
                             parts: Option[Seq[Any]] = None): Seq[String] = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    Versioned.readSnapshotAt(spark, dir, bloomPrefix(dataPrefix), "part",
-        bloomPins, parts.map(_.map(_.toString)))
+    pinnedSidecar(spark, dir, bloomPrefix(dataPrefix), bloomPins, parts)
       .filter(call_function("graft_bloom_might_contain",
         col("bloom"), lit(bloomHash(value))))
       .select(col("file"))
@@ -1118,8 +1247,7 @@ object FileStats {
         s"($MaxBatchedLookupKeys): that is a broadcast-join workload, " +
         "not a planning probe")
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    Versioned.readSnapshotAt(spark, dir, bloomPrefix(dataPrefix), "part",
-        bloomPins, parts.map(_.map(_.toString)))
+    pinnedSidecar(spark, dir, bloomPrefix(dataPrefix), bloomPins, parts)
       .filter(call_function("graft_bloom_might_contain_any",
         col("bloom"), lit(values.map(bloomHash).toArray)))
       .select(col("file"))

@@ -35,6 +35,26 @@ import org.apache.spark.sql.functions._
   *    TRANSACTIONAL — the resolved manifest's pinned vectors apply, so
   *    an as-of read shows the delete state as of that tag.
   *
+  * Planning contract of a snapshot-lane [[readTable]] (LakeTableSpec
+  * and ReadPlanningSpec pin it):
+  *  - ONE manifest resolve per read: the latest or as-of manifest is
+  *    read once into one entries map, and the data, zone, multi-zone,
+  *    bloom and DV pins all derive from it — a commit landing mid-read
+  *    cannot pair one generation's sidecar with another's data;
+  *  - NO Spark job before the caller's action on a warm lake: the
+  *    read's schema comes from one footer per distinct pinned
+  *    generation, read on the driver ([[Versioned.snapshotSchema]]),
+  *    and sidecar candidate planning runs over cached sidecar rows on
+  *    the driver. Only generations that diverge in schema without
+  *    `mergeSchema` fall back to Spark's footer-inference job;
+  *  - the sidecar row cache is keyed by each pinned sidecar file's
+  *    (path, length, modification time) from the driver listing of
+  *    the pinned leaves, so a new generation, a compaction or a file
+  *    replaced in place is a miss, never a stale hit. Misses load in
+  *    one job labelled `filestats.sidecarLoad`; the cache is a fixed
+  *    LRU bound, and a selection too large for it plans through the
+  *    distributed sidecar read instead.
+  *
   * Caller-asserted column contracts (inherited from the sidecar
   * lanes, which don't record their build column): a single-column
   * zone range must name the column the sidecar was built on, and a
@@ -321,20 +341,16 @@ object LakeTable {
         "bug, not an empty result")
     val snapshot = manifestPrefix.isDefined
 
-    // resolve (prefix → pins) through the manifest, as-of or latest —
-    // the ONE point where the time-travel tag is honored, so data and
-    // sidecar generations can never mix across manifest generations
-    def pinsOf(p: String): Map[String, String] = (manifestPrefix, asOfTag) match {
-      case (Some(mp), None) => Versioned.snapshotPins(dir, mp, p)
-      case (Some(mp), Some(t)) =>
-        Versioned.manifestAt(dir, mp, t).getOrElse(
-          throw new IllegalArgumentException(
-            s"no manifest '$mp' @ '$t' in $dir — never committed, or " +
-              "outside the GC retention window"))
-          .collect { case (k, g) if k.startsWith(s"$p/") =>
-            k.stripPrefix(s"$p/") -> g }
-      case _ => Map.empty
+    // resolve the manifest ONCE, as-of or latest — the one point where
+    // the time-travel tag is honored. Every pin lookup below (data,
+    // zone, multi-zone, bloom, DV) derives from this one entries map,
+    // so a commit landing mid-read can never pair one generation's
+    // sidecar with another generation's data or vectors.
+    val entries: Map[String, String] = manifestPrefix match {
+      case Some(mp) => Versioned.resolveManifest(dir, mp, asOfTag)
+      case None => Map.empty
     }
+    def pinsOf(p: String): Map[String, String] = Versioned.pinsIn(entries, p)
 
     def inPlaceHas(p: String): Boolean = {
       val root = new java.io.File(Versioned.partitionedRoot(dir, p))
@@ -402,41 +418,54 @@ object LakeTable {
 
     // ---- base read
     val dataPins = if (snapshot) pinsOf(prefix) else Map.empty[String, String]
+    val root = if (snapshot) Versioned.snapshotRoot(dir, prefix)
+               else Versioned.partitionedRoot(dir, prefix)
     val base: DataFrame = cand match {
       case Some(files) if files.isEmpty =>
         if (snapshot)
           Versioned.readSnapshotAt(spark, dir, prefix, partCol, dataPins,
             None, mergeSchema).filter(lit(false))
         else
-          spark.read.option("mergeSchema", mergeSchema)
-            .parquet(Versioned.partitionedRoot(dir, prefix))
+          spark.read.option("mergeSchema", mergeSchema).parquet(root)
             .filter(lit(false))
       case Some(files) =>
-        val root = if (snapshot) Versioned.snapshotRoot(dir, prefix)
-                   else Versioned.partitionedRoot(dir, prefix)
-        val df0 = spark.read.option("mergeSchema", mergeSchema)
-          .option("basePath", root).parquet(files: _*)
-        val df = if (snapshot) df0.drop("__gen") else df0
-        if (!mergeSchema) df
-        else {
-          // skipping never changes WHAT is returned — including the
-          // SCHEMA: a pruned candidate set may miss every file that
-          // carries an evolved column, so the union schema is derived
-          // from the UNPRUNED read and the pruned frame is aligned to
-          // it (missing columns null-filled). Costs the full footer
-          // walk at planning, only when mergeSchema is asked for.
-          val fullSchema =
-            (if (snapshot)
-              Versioned.readSnapshotAt(spark, dir, prefix, partCol,
-                dataPins, None, mergeSchema = true)
-            else
-              spark.read.option("mergeSchema", true).parquet(root)).schema
-          val have = df.columns.toSet
-          val aligned = fullSchema.fields.foldLeft(df) { (d, f) =>
-            if (have(f.name)) d
-            else d.withColumn(f.name, lit(null).cast(f.dataType))
-          }
-          aligned.select(fullSchema.fieldNames.map(col): _*)
+        // skipping never changes WHAT is returned — including the
+        // SCHEMA: a pruned candidate set may miss every file that
+        // carries an evolved column, so the read carries the schema of
+        // EVERY pinned generation (their union under mergeSchema,
+        // missing columns read as null). Snapshot schemas are probed
+        // ([[Versioned.snapshotSchema]], no footer job); the in-place
+        // lane, or a probe that cannot decide, lets Spark infer.
+        val probed =
+          if (snapshot)
+            Versioned.snapshotSchema(spark, root, partCol, dataPins,
+              mergeSchema)
+          else None
+        probed match {
+          case Some(s) =>
+            spark.read.schema(s).option("basePath", root)
+              .parquet(files: _*).drop("__gen")
+          case None =>
+            val df0 = spark.read.option("mergeSchema", mergeSchema)
+              .option("basePath", root).parquet(files: _*)
+            val df = if (snapshot) df0.drop("__gen") else df0
+            if (!mergeSchema) df
+            else {
+              // the union schema from the UNPRUNED read, the pruned
+              // frame aligned to it (missing columns null-filled)
+              val fullSchema =
+                (if (snapshot)
+                  Versioned.readSnapshotAt(spark, dir, prefix, partCol,
+                    dataPins, None, mergeSchema = true)
+                else
+                  spark.read.option("mergeSchema", true).parquet(root)).schema
+              val have = df.columns.toSet
+              val aligned = fullSchema.fields.foldLeft(df) { (d, f) =>
+                if (have(f.name)) d
+                else d.withColumn(f.name, lit(null).cast(f.dataType))
+              }
+              aligned.select(fullSchema.fieldNames.map(col): _*)
+            }
         }
       case None =>
         if (snapshot)
@@ -444,7 +473,7 @@ object LakeTable {
             parts, mergeSchema)
         else {
           val full = spark.read.option("mergeSchema", mergeSchema)
-            .parquet(Versioned.partitionedRoot(dir, prefix))
+            .parquet(root)
           parts match {
             // literal isin resolves at plan time as a partition filter
             case Some(vs) => full.filter(col(partCol).isin(vs: _*))

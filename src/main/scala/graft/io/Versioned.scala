@@ -1,6 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned parquet staging — the reference's GCS object versioning
   * (`add_version`, reference R/utils.R:30-52: objects named
@@ -665,10 +668,35 @@ object Versioned {
     */
   def snapshotPins(dir: String, manifestPrefix: String,
                    prefix: String): Map[String, String] =
-    latestManifest(dir, manifestPrefix).map(_._2).getOrElse(Map.empty)
-      .collect { case (k, g) if k.startsWith(s"$prefix/") =>
-        k.stripPrefix(s"$prefix/") -> g
-      }
+    pinsIn(latestManifest(dir, manifestPrefix).map(_._2).getOrElse(Map.empty),
+      prefix)
+
+  /** `prefix`'s (partition-value-string → generation) pins within ONE
+    * resolved manifest's entries — every pin lookup of a read derives
+    * from the same resolve, so data, sidecar and DV generations can
+    * never mix across manifest generations.
+    */
+  def pinsIn(entries: Map[String, String],
+             prefix: String): Map[String, String] =
+    entries.collect { case (k, g) if k.startsWith(s"$prefix/") =>
+      k.stripPrefix(s"$prefix/") -> g
+    }
+
+  /** The entries of the manifest a read resolves through: the newest
+    * one (empty when none committed yet), or the committed generation
+    * `asOfTag` — failing loudly when that tag was never committed or
+    * has been GC'd.
+    */
+  def resolveManifest(dir: String, manifestPrefix: String,
+                      asOfTag: Option[String]): Map[String, String] =
+    asOfTag match {
+      case None => latestManifest(dir, manifestPrefix).map(_._2)
+        .getOrElse(Map.empty)
+      case Some(t) => manifestAt(dir, manifestPrefix, t).getOrElse(
+        throw new IllegalArgumentException(
+          s"no manifest '$manifestPrefix' @ '$t' in $dir — never " +
+            "committed, or outside the GC retention window"))
+    }
 
   /** Read `prefix` at the snapshot the newest manifest pins,
     * restricted to `touched` partition values (None = all pinned). The
@@ -695,17 +723,10 @@ object Versioned {
   def readSnapshotPartitionsAt(spark: SparkSession, dir: String,
                                manifestPrefix: String, tag: String,
                                prefix: String, partCol: String,
-                               touched: Option[Seq[Any]]): DataFrame = {
-    val entries = manifestAt(dir, manifestPrefix, tag).getOrElse(
-      throw new IllegalArgumentException(
-        s"no manifest '$manifestPrefix' @ '$tag' in $dir — never " +
-          "committed, or outside the GC retention window"))
-    val pins = entries.collect {
-      case (k, g) if k.startsWith(s"$prefix/") =>
-        k.stripPrefix(s"$prefix/") -> g
-    }
-    readSnapshotAt(spark, dir, prefix, partCol, pins, touched)
-  }
+                               touched: Option[Seq[Any]]): DataFrame =
+    readSnapshotAt(spark, dir, prefix, partCol,
+      pinsIn(resolveManifest(dir, manifestPrefix, Some(tag)), prefix),
+      touched)
 
   /** Above this many pins a snapshot read assembles the pinned leaf
     * PATHS directly instead of filtering the whole root through a
@@ -738,37 +759,25 @@ object Versioned {
     // publish may add columns; merged reads present the union schema
     // with nulls for generations written before the column existed
     // (the standard additive-evolution contract — renames/drops are a
-    // rewrite, not an evolution). Off by default: schema merging pays
-    // a footer read per file at planning.
+    // rewrite, not an evolution).
     //
-    // One GENERATION is one write is ONE schema (every publish writes a
-    // single frame), so whether merging is NEEDED is decidable from one
-    // footer per distinct selected generation — a driver-side metadata
-    // probe, instead of the per-file footer-merge job Spark runs for
-    // mergeSchema=true (probe-measured ~0.1 s per read on 160-leaf
-    // roots, ×10+ reads per changefeed consumer query). Divergent (or
-    // unlistable, e.g. non-local-store) generations fall back to the
-    // full footer merge; identical generations read plain — same union
-    // schema either way, since the union of identical schemas is the
-    // schema itself. (This also makes the merged read's schema
-    // consistently the union of the SELECTED generations in both read
-    // modes below; the disjunction mode's whole-root footer merge could
-    // previously surface a column only a superseded, unpinned
-    // generation carried.)
-    val effMerge = mergeSchema && {
-      val oneLeafPerGen = sel.groupBy(_._2).map { case (g, vs) =>
-        g -> vs.keys.head }
-      oneLeafPerGen.size > 1 && {
-        val schemas = oneLeafPerGen.map { case (g, v) =>
-          val leaf = new java.io.File(s"$root/$partCol=$v/__gen=$g")
-          Option(leaf.listFiles()).toSeq.flatten
-            .find(_.getName.endsWith(".parquet"))
-            .map(f => spark.read.parquet(f.getPath).schema)
-        }
-        schemas.exists(_.isEmpty) || schemas.flatten.toSet.size > 1
-      }
+    // The schema is PROBED, not inferred: one footer per distinct
+    // generation, read on the driver ([[snapshotSchema]]), is handed to
+    // the reader, so planning launches no footer job. It is always the
+    // schema of PINNED generations — Spark's inference over the whole
+    // root reads whichever footer lists first, possibly a superseded,
+    // unpinned generation's that lacks a column the pinned one carries
+    // (SnapshotLaneSpec pins the single-generation case). A merged read
+    // carries the union over ALL of `pins`, so restricting to `touched`
+    // never changes the schema; a plain read, the selected generations'
+    // shared schema. Only divergent generations without `mergeSchema`,
+    // or an unlistable leaf, fall back to Spark's inference.
+    val schema = snapshotSchema(spark, root, partCol,
+      if (mergeSchema || sel.isEmpty) pins else sel, mergeSchema)
+    val reader = schema match {
+      case Some(s) => spark.read.schema(s)
+      case None => spark.read.option("mergeSchema", mergeSchema)
     }
-    val reader = spark.read.option("mergeSchema", effMerge)
     if (sel.size > SnapshotPathReadThreshold) {
       // pins always name directories their manifest's commit proved
       // written (emptied partitions leave the pin map), so every path
@@ -785,13 +794,54 @@ object Versioned {
     }
   }
 
-  /** Parquet data files of one pinned (partition, generation) leaf. */
-  private def leafDataFiles(dir: String, prefix: String, partCol: String,
-                            v: String, gen: String): Seq[java.io.File] =
-    Option(new java.io.File(snapshotRoot(dir, prefix),
-        s"$partCol=$v/__gen=$gen").listFiles())
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .filter(_.getName.endsWith(".parquet"))
+  /** Parquet data files of one (partition, generation) leaf of the
+    * snapshot root `root`, listed through the Hadoop FileSystem (any
+    * store, not only where `java.io.File` works) and sorted by name;
+    * hidden entries are skipped the way Spark's file index skips them.
+    * None when the leaf does not exist.
+    */
+  def leafFiles(conf: Configuration, root: String, partCol: String,
+                v: String, gen: String): Option[Seq[FileStatus]] = {
+    val leaf = new Path(s"$root/$partCol=$v/__gen=$gen")
+    try Some(leaf.getFileSystem(conf).listStatus(leaf).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && n.endsWith(".parquet") &&
+          !n.startsWith("_") && !n.startsWith(".")
+      }
+      .sortBy(_.getPath.getName))
+    catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** The data schema (partition columns excluded) of a snapshot read
+    * over the `sel` pins of `root`, probed on the driver from ONE
+    * footer per distinct generation: a generation is one write, so it
+    * has one schema. The conversion is the one Spark's schema-
+    * inference job runs per file (`readSchemaFromFooter` with the
+    * session's converter), without the job.
+    *
+    * @return the shared schema when the generations agree, their union
+    *         (oldest generation's fields first) under `mergeSchema`;
+    *         None when they diverge without `mergeSchema`, when `sel`
+    *         is empty, or when a leaf is missing or holds no data file
+    *         — the caller then lets Spark infer
+    */
+  def snapshotSchema(spark: SparkSession, root: String, partCol: String,
+                     sel: Map[String, String],
+                     mergeSchema: Boolean): Option[StructType] = {
+    val conf = GraftShim.hadoopConf(spark)
+    val perGen = sel.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, vs) =>
+      leafFiles(conf, root, partCol, vs.keys.min, g).flatMap(_.headOption)
+        .map(GraftShim.parquetFooterSchema(spark, conf, _))
+    }
+    if (perGen.isEmpty || perGen.exists(_.isEmpty)) None
+    else perGen.flatten.distinct match {
+      case Seq(one) => Some(one)
+      case many if mergeSchema =>
+        Some(many.reduce(GraftShim.mergeSchemas(spark, _, _)))
+      case _ => None
+    }
+  }
 
   /** Read-optimization COMPACTION for snapshot roots — the
     * write-optimized → read-optimized transition (a table format's
@@ -865,8 +915,10 @@ object Versioned {
     var entries = entries0
     val report = roots.map { case (prefix, partCol) =>
       val pins = snapshotPins(dir, manifestPrefix, prefix)
+      val conf = GraftShim.hadoopConf(spark)
       val fat = pins.filter { case (v, g) =>
-        leafDataFiles(dir, prefix, partCol, v, g).size > maxFiles
+        leafFiles(conf, snapshotRoot(dir, prefix), partCol, v, g)
+          .exists(_.size > maxFiles)
       }
       if (fat.nonEmpty) {
         def pinned(sidePrefix: String) =
@@ -1022,21 +1074,14 @@ object Versioned {
                               manifestPrefix: String, dataPrefix: String,
                               partCol: String, keyCol: String,
                               asOfTag: Option[String] = None): DataFrame = {
-    val dvp = dvPrefix(dataPrefix)
-    def pinsOf(p: String): Map[String, String] = asOfTag match {
-      case None => snapshotPins(dir, manifestPrefix, p)
-      case Some(t) => manifestAt(dir, manifestPrefix, t).getOrElse(
-          throw new IllegalArgumentException(
-            s"no manifest '$manifestPrefix' @ '$t' in $dir"))
-        .collect { case (k, g) if k.startsWith(s"$p/") =>
-          k.stripPrefix(s"$p/") -> g }
-    }
+    val entries = resolveManifest(dir, manifestPrefix, asOfTag)
     val data = readSnapshotAt(spark, dir, dataPrefix, partCol,
-      pinsOf(dataPrefix), None)
-    val dvPins = pinsOf(dvp)
+      pinsIn(entries, dataPrefix), None)
+    val dvPins = pinsIn(entries, dvPrefix(dataPrefix))
     if (dvPins.isEmpty) data
     else data.join(
-      readSnapshotAt(spark, dir, dvp, partCol, dvPins, None),
+      readSnapshotAt(spark, dir, dvPrefix(dataPrefix), partCol, dvPins,
+        None),
       Seq(partCol, keyCol), "left_anti")
   }
 
@@ -1053,12 +1098,7 @@ object Versioned {
                         prefix: String, fromTag: String,
                         toTag: String): Seq[String] = {
     def pinsAt(tag: String): Map[String, String] =
-      manifestAt(dir, manifestPrefix, tag).getOrElse(
-        throw new IllegalArgumentException(
-          s"no manifest '$manifestPrefix' @ '$tag' in $dir — never " +
-            "committed, or outside the GC retention window"))
-        .collect { case (k, g) if k.startsWith(s"$prefix/") =>
-          k.stripPrefix(s"$prefix/") -> g }
+      pinsIn(resolveManifest(dir, manifestPrefix, Some(tag)), prefix)
     val a = pinsAt(fromTag)
     val b = pinsAt(toTag)
     (a.keySet ++ b.keySet).filter(v => a.get(v) != b.get(v)).toSeq.sorted
@@ -1104,9 +1144,8 @@ object Versioned {
         changedPartitions(dir, manifestPrefix, dvp, fromTag, toTag)
       ).distinct.sorted
     def side(tag: String): DataFrame = {
-      val entries = manifestAt(dir, manifestPrefix, tag).get
-      def pinsOf(p: String) = entries.collect {
-        case (k, g) if k.startsWith(s"$p/") => k.stripPrefix(s"$p/") -> g }
+      val entries = resolveManifest(dir, manifestPrefix, Some(tag))
+      def pinsOf(p: String) = pinsIn(entries, p)
       val data = readSnapshotAt(spark, dir, dataPrefix, partCol,
         pinsOf(dataPrefix), Some(churned), mergeSchema = true)
       val dvPins = pinsOf(dvp)

@@ -2449,13 +2449,12 @@ object Incremental {
     * published index version — appended or purged.
     */
   private def bm25Serve(merged: DataFrame, qTerms: Int, k: Int): DataFrame = {
-    // null-id guard: `nd` counts the dl aggregate's rows, which —
-    // unlike the previous countDistinct(id) — would include a null-id
-    // group. Postings ids are non-null by construction in every cycle
-    // (they come from a groupBy over document ids), but filter
-    // explicitly so nd keeps countDistinct semantics even on a
-    // hand-fed postings frame (null-id postings never scored anyway:
-    // the dl join below can't match them).
+    // null-id guard: postings ids are non-null by construction in
+    // every cycle (they come from a groupBy over document ids), but a
+    // hand-fed postings frame may carry a null-id row. EVERY collection
+    // statistic derives from the filtered postings — nd/tot through dl,
+    // and df/cf too — so such a row can neither score nor shift idf or
+    // the query panel.
     val posts = merged.filter(col("id").isNotNull)
     val dl = posts.groupBy(col("id")).agg(sum(col("tf")).as("dl"))
     // collection stats derive from dl (nd = one row per id, tot = the
@@ -2463,12 +2462,12 @@ object Incremental {
     // dl aggregate's exchange is an identical subtree under both
     // references, so Spark reuses it
     val stats = dl.agg(count(lit(1)).as("nd"), sum(col("dl")).as("tot"))
-    val dft = merged.groupBy(col("tok"))
+    val dft = posts.groupBy(col("tok"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
     // the panel: the index's own hottest terms — distributed TakeOrdered
     val qt = dft.orderBy(col("cf").desc, col("tok").asc).limit(qTerms)
       .select(col("tok"), col("df"))
-    val scored = merged.join(broadcast(qt), "tok")
+    val scored = posts.join(broadcast(qt), "tok")
       .join(dl, "id")
       .crossJoin(broadcast(stats))
       .withColumn("avgdl", col("tot").cast("double") / col("nd").cast("double"))

@@ -514,6 +514,29 @@ class IncrementalSpec extends SparkTestBase {
       s"collection stats unchanged ($nd vs $ndFull) — deletion is cosmetic")
   }
 
+  test("BM25 serving: a hand-fed null-id posting moves neither df/cf, the panel, nor any score") {
+    import spark.implicits._
+    val dir = graft.core.Scratch.dir("bm25_null_id")
+    val clean = Seq[(Option[Long], String, Long)]((Some(1L), "a", 3L),
+      (Some(1L), "b", 1L), (Some(2L), "a", 1L), (Some(2L), "c", 2L),
+      (Some(3L), "b", 2L), (Some(3L), "c", 1L), (Some(4L), "d", 1L))
+    // the null-id posting alone would make "d" the hottest term
+    val dirty = clean :+ ((None, "d", 5L))
+    val tag = "00000001_a"
+    graft.io.Versioned.write(Seq(999L).toDF("id"), dir, "bnull_tomb", tag)
+    def serve(prefix: String, posts: Seq[(Option[Long], String, Long)]) = {
+      graft.io.Versioned.write(posts.toDF("id", "tok", "tf"), dir, prefix,
+        tag)
+      graft.pipeline.Incremental.bm25DeleteCycle(spark, dir, prefix,
+        "bnull_tomb", qTerms = 2, k = 10, newTag = "00000002_b")
+        .orderBy($"rnk").collect().toSeq
+    }
+    val want = serve("bnull_clean", clean)
+    assert(want.nonEmpty)
+    assert(serve("bnull_dirty", dirty) == want,
+      "a null-id posting shifted the collection statistics")
+  }
+
   test("two chained SURVEY cycles ≡ one full reprocess (DAG composition across versions)") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -183,6 +183,9 @@ class LakeTableSpec extends SparkTestBase {
       .orderBy($"part").collect().toSeq
     assert(stats == wantStats,
       "facade stats aggregate diverged from the data twin")
+    // both data roots and both sidecars: probe ≡ Spark's inference
+    assert(ReadPlanningSpec.assertProbeMatchesInference(spark, dir,
+      "ltc_root") == 4)
   }
 
   test("snapshot lane: latest and as-of, skipped and bloomed, evolved schema, DV-through-history") {
@@ -281,6 +284,10 @@ class LakeTableSpec extends SparkTestBase {
     assert(evSkip.count() > 0 &&
       evSkip.filter($"flag".isNotNull).isEmpty,
       "pre-evolution candidates must null-fill the evolved column")
+
+    // the evolved data root and both sidecars: probe ≡ inference
+    assert(ReadPlanningSpec.assertProbeMatchesInference(spark, dir,
+      "lts_root") == 3)
 
     // deletion vectors reach HISTORY: erasure applies as-of too
     Versioned.appendDeleteVectors(spark, dir, "lts_data", "m", "id",
@@ -385,6 +392,9 @@ class LakeTableSpec extends SparkTestBase {
     assert(rows(sread(Some(g1))) ==
       rows(df.filter($"id".isin(keys: _*))),
       "as-of the pre-delete tag must show the whole batch")
+    // data, bloom and pinned-DV roots: probe ≡ inference
+    assert(ReadPlanningSpec.assertProbeMatchesInference(spark, sroot,
+      "ltk_root") == 3)
 
     // the metadata-only facade refuses BOTH dirty postures: pinned DVs
     // on the snapshot lane, appended vectors on the in-place lane

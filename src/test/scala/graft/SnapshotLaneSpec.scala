@@ -259,6 +259,38 @@ class SnapshotLaneSpec extends SparkTestBase {
       s"fast-path merged read diverged from the logical snapshot: $perMonth vs $expect")
   }
 
+  test("mergeSchema over ONE pinned generation keeps its evolved column (no superseded footer wins)") {
+    val dir = graft.core.Scratch.dir("snap_evo_single")
+    Option(new java.io.File(dir).listFiles()).foreach(_.toSeq
+      .filter(_.getName.startsWith("evs_root__")).foreach(_.delete()))
+    // g1 = (id, m, a) over months 0 and 1; g2 = (id, m, a, b) rewrites
+    // month 1; the manifest pins ONLY m1 → g2, so the superseded g1
+    // leaves still sit in the root but no pin names them
+    val g1 = "00000001_a"
+    val base = spark.range(2000L).select($"id",
+      ($"id" % 2).cast("long").as("m"), ($"id" * 3).as("a"))
+    Versioned.writeSnapshotFull(base, dir, "evs_data", "m", g1)
+    val g2 = "00000002_b"
+    val withB = base.filter($"m" === 1L).withColumn("b", $"id" + 11L)
+      .localCheckpoint(true)
+    val p2 = Versioned.writeSnapshotPartitions(withB, dir, "evs_data", "m",
+      g2)
+    assert(p2.map(_.toString) == Set("1"))
+    Versioned.commitManifest(dir, "evs_root", g2,
+      Map(Versioned.snapshotPinKey("evs_data", 1L) -> g2))
+    val merged = Versioned.readSnapshotPartitions(spark, dir, "evs_root",
+      "evs_data", "m", None, mergeSchema = true)
+    assert(merged.columns.toSeq.sorted == Seq("a", "b", "id", "m"),
+      s"the pinned generation's column b was dropped: ${merged.columns.toSeq}")
+    val leaf = spark.read.parquet(
+      s"${Versioned.snapshotRoot(dir, "evs_data")}/m=1/__gen=$g2")
+    assert(merged.select($"id", $"a", $"b").orderBy($"id").collect().toSeq ==
+      leaf.select($"id", $"a", $"b").orderBy($"id").collect().toSeq)
+    // the plain read of the same pins carries the same schema
+    assert(Versioned.readSnapshotPartitions(spark, dir, "evs_root",
+      "evs_data", "m", None).columns.toSeq == merged.columns.toSeq)
+  }
+
   private class ReadTap extends org.apache.spark.scheduler.SparkListener {
     val recs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
     override def onTaskEnd(
