@@ -55,6 +55,24 @@ import org.apache.spark.sql.functions._
   *    LRU bound, and a selection too large for it plans through the
   *    distributed sidecar read instead.
   *
+  * Commit contract of [[commitSnapshot]] and the snapshot-lane DV
+  * commit ([[Versioned.commitSnapshotDeleteVectors]]; CommitPlanningSpec
+  * pins it):
+  *  - the caller's input is evaluated ONCE: a root's frame by its data
+  *    write, a delete batch by one materialization of its (partition,
+  *    key) projection;
+  *  - the present partition set is OBSERVED by the write that evaluates
+  *    the frame (`collect_set` over the written rows), never collected
+  *    by a job of its own and never read off a listing (a crashed
+  *    attempt's leftover leaves stay unpinned); a null partition value,
+  *    which has no path-safe leaf to pin, fails the commit before its
+  *    manifest flips;
+  *  - ONE manifest resolve per commit: every root's prior pins derive
+  *    from the entries map the stale/replay check read;
+  *  - job budget: every job carries a `spark.job.description`; a
+  *    correction with zone and bloom sidecars runs at most 8 jobs, a
+  *    delete-vector commit at most 4.
+  *
   * Caller-asserted column contracts (inherited from the sidecar
   * lanes, which don't record their build column): a single-column
   * zone range must name the column the sidecar was built on, and a
@@ -136,7 +154,7 @@ object LakeTable {
     val entries0 = cur.map(_._2).getOrElse(Map.empty)
     var entries = entries0
     val report = roots.map { r =>
-      val pins0 = Versioned.snapshotPins(dir, manifestPrefix, r.prefix)
+      val pins0 = Versioned.pinsIn(entries0, r.prefix)
       val present = Versioned.writeSnapshotPartitions(r.df, dir,
         r.prefix, r.partCol, tag, r.filesPerPartition)
       val pins = pins0 ++ present.map(_.toString -> tag)

@@ -39,19 +39,43 @@ object Versioned {
     path
   }
 
-  def resolveLatest(dir: String, prefix: String): Option[String] = {
-    val d = new java.io.File(dir)
-    Option(d.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-      .map(_.getName)
-      .filter(n => n.startsWith(s"${prefix}__") && n.endsWith("__.parquet"))
+  /** `prefix`'s object names in `dir`, newest first, listed through the
+    * Hadoop FileSystem (any store, not only where `java.io.File` works;
+    * hidden entries skipped). Empty when `dir` does not exist.
+    */
+  private def versionNames(dir: String, prefix: String): Seq[String] = {
+    val d = new Path(dir)
+    val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(GraftShim.hadoopConf)
+      .getOrElse(new Configuration())
+    val names =
+      try d.getFileSystem(conf).listStatus(d).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    names.filter(n => !hidden(n) && n.startsWith(s"${prefix}__") &&
+        n.endsWith("__.parquet"))
       .sorted(Ordering[String].reverse)
-      .headOption
-      .map(n => s"$dir/$n")
   }
 
-  def readLatest(spark: SparkSession, dir: String, prefix: String): DataFrame =
-    spark.read.parquet(resolveLatest(dir, prefix).getOrElse(
-      throw new IllegalArgumentException(s"no versioned object for prefix '$prefix' in $dir")))
+  def resolveLatest(dir: String, prefix: String): Option[String] =
+    versionNames(dir, prefix).headOption.map(n => s"$dir/$n")
+
+  /** The newest object of `prefix`. Its schema is read from ONE footer
+    * of the object's top-level data files on the driver (an object is
+    * one write, so it has one schema) and handed to the reader, so the
+    * read launches no schema-inference job. An object whose top level
+    * holds no data file (e.g. a partitioned layout) lets Spark infer.
+    */
+  def readLatest(spark: SparkSession, dir: String, prefix: String): DataFrame = {
+    val path = resolveLatest(dir, prefix).getOrElse(
+      throw new IllegalArgumentException(s"no versioned object for prefix '$prefix' in $dir"))
+    val conf = GraftShim.hadoopConf(spark)
+    dataFiles(conf, new Path(path)).flatMap(_.headOption) match {
+      case Some(f) =>
+        spark.read.schema(GraftShim.parquetFooterSchema(spark, conf, f))
+          .parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   /** @return true iff `f` (and everything under it) is gone afterwards —
     *         `File.delete` failures must not be swallowed, or [[gc]]
@@ -85,11 +109,7 @@ object Versioned {
   def gc(dir: String, prefix: String, keepLast: Int): Seq[String] = {
     require(keepLast >= 1, s"gc must keep at least one version, got $keepLast")
     val d = new java.io.File(dir)
-    val versions = Option(d.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-      .map(_.getName)
-      .filter(n => n.startsWith(s"${prefix}__") && n.endsWith("__.parquet"))
-      .sorted(Ordering[String].reverse)
-    val doomed = versions.drop(keepLast)
+    val doomed = versionNames(dir, prefix).drop(keepLast)
     // only versions that are VERIFIABLY gone enter the result — a failed
     // delete (permissions, concurrent reader holding a handle on some
     // filesystems) must not be reported as reclaimed
@@ -572,6 +592,17 @@ object Versioned {
     * nothing else (no self-overwrite hazard: the plan reads prior-gen
     * directories, the write targets this gen's).
     *
+    * The present set is OBSERVED by the write itself: a fresh
+    * `Observation` carrying `collect_set(partCol)` rides the frame the
+    * write consumes, so `df` is evaluated exactly once and no job runs
+    * only to find its partitions (`collect_set` is idempotent, so a
+    * retried or speculative task cannot corrupt it). It still names only
+    * values `df` carries — never a listing of the root, where a crashed
+    * earlier attempt of the same gen can have left leaves for partitions
+    * this df no longer carries, which a listing would resurrect into the
+    * pins. A null partition value fails the publish: it has no
+    * path-safe leaf, so its rows could never be pinned.
+    *
     * @return the partition values present in `df` (driver-side,
     *         bounded by the calendar/buckets) — the caller folds them
     *         into the manifest pins; a touched partition NOT in the
@@ -579,29 +610,65 @@ object Versioned {
     */
   def writeSnapshotPartitions(df: DataFrame, dir: String, prefix: String,
                               partCol: String, gen: String,
-                              filesPerPartition: Int = 1): Set[Any] =
-    graft.core.Jobs.describe(df.sparkSession,
-      s"versioned.writeSnapshotPartitions $prefix@$gen") {
-      val present = df.select(df.col(partCol)).distinct()
-        .collect().map(_.get(0)).toSet
-      writeSnapshotKnown(df, dir, prefix, partCol, gen, filesPerPartition)
-      present
-    }
+                              filesPerPartition: Int = 1): Set[Any] = {
+    val obs = org.apache.spark.sql.Observation()
+    writeGeneration(observePartitions(layout(df, partCol, filesPerPartition),
+      partCol, obs), dir, prefix, partCol, gen)
+    observedPartitions(obs, s"snapshot root '$prefix'@$gen", partCol).toSet
+  }
+
+  /** `df` carrying `obs`: the set of its `partCol` values and the count
+    * of its rows whose `partCol` is null ([[observedPartitions]] reads
+    * both once the action that consumes `df` has returned).
+    */
+  private def observePartitions(df: DataFrame, partCol: String,
+                                obs: org.apache.spark.sql.Observation)
+      : DataFrame = {
+    import org.apache.spark.sql.functions.{col, collect_set, count, lit}
+    df.observe(obs, collect_set(col(partCol)).as("present"),
+      (count(lit(1)) - count(col(partCol))).as("nulls"))
+  }
+
+  /** The partition values [[observePartitions]] collected over the
+    * action it rode. A null partition value fails loudly: it has no
+    * path-safe leaf, so its rows could never be pinned (`collect_set`
+    * drops nulls, so the set alone would hide them). The action has
+    * returned, so the metrics are complete or on their way through the
+    * listener bus; the bound only turns a lost event into a loud failure
+    * instead of a hang.
+    */
+  private def observedPartitions(obs: org.apache.spark.sql.Observation,
+                                 what: String, partCol: String): Seq[Any] = {
+    val row = scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(5, "min"))
+    require(row.size > 0, s"$what: the action reported no observed metrics")
+    require(row.getLong(1) == 0L,
+      s"$what: ${row.getLong(1)} row(s) with a null '$partCol' — " +
+        "snapshot pins require path-safe partition values")
+    row.getSeq[Any](0)
+  }
 
   /** [[writeSnapshotPartitions]] when the caller ALREADY knows the
     * present partition set (e.g. the sidecar writers, whose stats
-    * frame's partitions are exactly the touched data pins): skips the
-    * present-detection pass, so `df` — whose lineage may be a full
-    * aggregation scan — is computed exactly once, by the write.
+    * frame's partitions are exactly the touched data pins): no
+    * observation rides the write, and `df` — whose lineage may be a
+    * full aggregation scan — is computed exactly once, by the write.
     */
   private[io] def writeSnapshotKnown(df: DataFrame, dir: String,
                                      prefix: String, partCol: String,
                                      gen: String,
                                      filesPerPartition: Int): Unit =
-    graft.core.Jobs.describe(df.sparkSession,
+    writeGeneration(layout(df, partCol, filesPerPartition), dir, prefix,
+      partCol, gen)
+
+  /** Write an already laid-out frame as generation `gen` of `prefix`'s
+    * snapshot root (dynamic overwrite of its (partition, gen) leaves).
+    */
+  private def writeGeneration(laid: DataFrame, dir: String, prefix: String,
+                              partCol: String, gen: String): Unit =
+    graft.core.Jobs.describe(laid.sparkSession,
       s"versioned.writeSnapshotPartitions $prefix@$gen") {
-      layout(df, partCol, filesPerPartition)
-        .withColumn("__gen", org.apache.spark.sql.functions.lit(gen))
+      laid.withColumn("__gen", org.apache.spark.sql.functions.lit(gen))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partCol, "__gen").parquet(snapshotRoot(dir, prefix))
@@ -625,18 +692,19 @@ object Versioned {
       // STATIC overwrite wiped the root before writing, so the
       // first-level `partCol=` directories ARE exactly df's present
       // partitions — a driver-side listing, not a second evaluation of
-      // `df` (the previous present-detection `distinct().collect()`
-      // re-ran the whole input subtree before the write ran it again:
-      // probe-measured as HALF the cost of a fixture whose input is an
-      // expensive lazy merge). Values come back as the directory-name
-      // strings; every consumer normalizes partition values through
-      // `toString` (pin keys, touched-set resolution), and the lane
-      // already requires path-safe partition values — same contract as
+      // `df` (a pre-write `distinct().collect()` re-runs the whole
+      // input subtree before the write runs it again: probe-measured
+      // as HALF the cost of a fixture whose input is an expensive lazy
+      // merge). Values come back as the directory-name strings; every
+      // consumer normalizes partition values through `toString` (pin
+      // keys, touched-set resolution), and the lane already requires
+      // path-safe partition values — same contract as
       // [[overwriteTouchedPartitions]]'s emptied-partition cleanup.
-      // (The DYNAMIC twin [[writeSnapshotPartitions]] must keep its
-      // pre-write detection: a crashed earlier attempt of the same gen
-      // can leave leaves for partitions this df no longer carries, and
-      // listing would resurrect them into the pins.)
+      // (The DYNAMIC twin [[writeSnapshotPartitions]] cannot list: a
+      // crashed earlier attempt of the same gen can leave leaves for
+      // partitions this df no longer carries, and listing would
+      // resurrect them into the pins — it observes the set its own
+      // write evaluates instead.)
       Option(new java.io.File(root).listFiles()).map(_.toSeq)
         .getOrElse(Seq.empty)
         .filter(f => f.isDirectory && f.getName.startsWith(s"$partCol="))
@@ -801,17 +869,25 @@ object Versioned {
     * None when the leaf does not exist.
     */
   def leafFiles(conf: Configuration, root: String, partCol: String,
-                v: String, gen: String): Option[Seq[FileStatus]] = {
-    val leaf = new Path(s"$root/$partCol=$v/__gen=$gen")
-    try Some(leaf.getFileSystem(conf).listStatus(leaf).toSeq
+                v: String, gen: String): Option[Seq[FileStatus]] =
+    dataFiles(conf, new Path(s"$root/$partCol=$v/__gen=$gen"))
+
+  /** The parquet data files directly under `dir`, sorted by name, hidden
+    * entries skipped; None when `dir` does not exist.
+    */
+  private def dataFiles(conf: Configuration,
+                        dir: Path): Option[Seq[FileStatus]] =
+    try Some(dir.getFileSystem(conf).listStatus(dir).toSeq
       .filter { st =>
         val n = st.getPath.getName
-        st.isFile && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
+        st.isFile && n.endsWith(".parquet") && !hidden(n)
       }
       .sortBy(_.getPath.getName))
     catch { case _: java.io.FileNotFoundException => None }
-  }
+
+  /** Names Spark's file index skips. */
+  private def hidden(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
 
   /** The data schema (partition columns excluded) of a snapshot read
     * over the `sel` pins of `root`, probed on the driver from ONE
@@ -914,7 +990,7 @@ object Versioned {
         s"no manifest for prefix '$manifestPrefix' in $dir"))
     var entries = entries0
     val report = roots.map { case (prefix, partCol) =>
-      val pins = snapshotPins(dir, manifestPrefix, prefix)
+      val pins = pinsIn(entries0, prefix)
       val conf = GraftShim.hadoopConf(spark)
       val fat = pins.filter { case (v, g) =>
         leafFiles(conf, snapshotRoot(dir, prefix), partCol, v, g)
@@ -952,12 +1028,9 @@ object Versioned {
             s"(${FileStats.sidecarMultiPrefix(prefix)}) but no spec " +
             "was passed or manifest-pinned — compacting would strand " +
             "stats naming superseded files (a crash after GC)")
-        // checkpoint cuts lineage to the prior-gen leaves so the
-        // present-set collect and the write don't re-list them twice
-        val df = graft.ext.Exec.checkpointEager(
-          readSnapshotAt(spark, dir, prefix, partCol, fat, None))
-        val present = writeSnapshotPartitions(df, dir, prefix, partCol,
-          tag, targetFiles)
+        val present = writeSnapshotPartitions(
+          readSnapshotAt(spark, dir, prefix, partCol, fat, None), dir, prefix,
+          partCol, tag, targetFiles)
         require(present.map(_.toString) == fat.keySet,
           s"compaction of '$prefix' changed the partition set: pinned " +
             s"${fat.keySet} vs rewritten ${present.map(_.toString)} — a " +
@@ -1033,7 +1106,7 @@ object Versioned {
                                   dataPrefix: String, partCol: String,
                                   keyCol: String, deletes: DataFrame,
                                   tag: String): String = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     val dvp = dvPrefix(dataPrefix)
     val (curTag, entries0) = latestManifest(dir, manifestPrefix).getOrElse(
       throw new IllegalArgumentException(
@@ -1047,19 +1120,27 @@ object Versioned {
       s"stale delete batch refused: tag '$tag' is older than published " +
         s"'$curTag' for '$manifestPrefix' — already committed, or a " +
         "zombie replay")
-    val dvPins0 = snapshotPins(dir, manifestPrefix, dvp)
-    val touched = deletes.select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSeq
+    val dvPins0 = pinsIn(entries0, dvp)
+    // the caller's `deletes` is evaluated ONCE: its (partition, key)
+    // projection is materialized by one (labelled) checkpoint job that
+    // also observes the touched partitions, so no job runs only to
+    // find them; a null partition value fails before any write
+    val obs = org.apache.spark.sql.Observation()
+    val keys = graft.ext.Exec.checkpointEager(observePartitions(
+      deletes.select(col(partCol), col(keyCol)), partCol, obs))
+    val touched = observedPartitions(obs, s"delete batch '$dvp'@$tag",
+      partCol)
     val prior =
-      if (dvPins0.isEmpty) deletes.filter(org.apache.spark.sql.functions.lit(false))
+      if (dvPins0.isEmpty) keys.filter(lit(false))
       else readSnapshotAt(spark, dir, dvp, partCol, dvPins0, Some(touched))
-    val merged = graft.ext.Exec.checkpointEager(
-      prior.select(col(partCol), col(keyCol))
-        .unionByName(deletes.select(col(partCol), col(keyCol)))
-        .distinct())
-    val present = writeSnapshotPartitions(merged, dir, dvp, partCol, tag)
+        .select(col(partCol), col(keyCol))
+    // prior vectors are read only for `touched`, so the present set IS
+    // `touched`: the write needs no observation, and the distinct runs
+    // in the shuffle of the write's own partition layout
+    writeGeneration(layout(prior.unionByName(keys), partCol, 1).distinct(),
+      dir, dvp, partCol, tag)
     val entries = entries0 ++
-      present.map(v => snapshotPinKey(dvp, v) -> tag)
+      touched.map(v => snapshotPinKey(dvp, v) -> tag)
     commitManifest(dir, manifestPrefix, tag, entries)
   }
 
@@ -1255,7 +1336,7 @@ object Versioned {
     require(tag >= curTag,
       s"stale purge refused: tag '$tag' is older than published " +
         s"'$curTag' for '$manifestPrefix'")
-    val dvPins = snapshotPins(dir, manifestPrefix, dvp)
+    val dvPins = pinsIn(entries0, dvp)
     if (dvPins.isEmpty) return Seq.empty
     def pinnedSide(sidePrefix: String) =
       entries0.keys.exists(_.startsWith(s"$sidePrefix/"))
@@ -1276,7 +1357,7 @@ object Versioned {
     refuse(FileStats.bloomPrefix(dataPrefix), "bloom", bSpec)
     refuse(FileStats.sidecarMultiPrefix(dataPrefix), "multi-column zone",
       mSpec)
-    val dataPins = snapshotPins(dir, manifestPrefix, dataPrefix)
+    val dataPins = pinsIn(entries0, dataPrefix)
     val touched = dvPins.keys.toSeq.sorted
     val dv = readSnapshotAt(spark, dir, dvp, partCol, dvPins, None)
     val survivors = graft.ext.Exec.checkpointEager(

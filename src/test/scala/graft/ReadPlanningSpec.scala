@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.Assertions._
 import graft.io.{FileStats, LakeTable, Versioned}
 
@@ -19,27 +18,8 @@ import graft.io.{FileStats, LakeTable, Versioned}
 class ReadPlanningSpec extends SparkTestBase {
   import spark.implicits._
 
-  private class JobTap extends SparkListener {
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      descs.add(Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("<unlabelled>"))
-  }
-
-  /** `body`'s result and the descriptions of the jobs it launched. */
-  private def jobsOf[T](body: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    org.apache.spark.GraftTestBus.drain(sc)
-    val tap = new JobTap
-    sc.addSparkListener(tap)
-    try {
-      val r = body
-      org.apache.spark.GraftTestBus.drain(sc)
-      import scala.jdk.CollectionConverters._
-      (r, tap.descs.asScala.toSeq)
-    } finally sc.removeSparkListener(tap)
-  }
+  private def jobsOf[T](body: => T): (T, Seq[String]) =
+    JobTap.jobsOf(spark)(body)
 
   /** Plan `read` cold (only sidecar-load jobs allowed), then again warm
     * (no job at all); returns the warm frame.
