@@ -11,16 +11,13 @@ import org.apache.spark.sql.types.StructType
   * matching object, R/preprocessing-surveys.R:69-73).
   *
   * Re-expressed for a distributed store: each write lands in a
-  * `prefix__<versionTag>__.parquet` directory; `resolveLatest` lists the
+  * `prefix__<tag>__.parquet` directory; `resolveLatest` lists the
   * prefix (a driver-side metadata operation, O(versions)) and reads the
   * lexicographically newest tag — timestamps are zero-padded so
   * lexicographic == chronological. On object stores the same naming
   * works over a bucket listing.
   */
 object Versioned {
-
-  def versionTag(sha: String = "local"): String =
-    f"${System.currentTimeMillis()}%020d_$sha"
 
   def write(df: DataFrame, dir: String, prefix: String, tag: String): String = {
     val path = s"$dir/${prefix}__${tag}__.parquet"
@@ -59,15 +56,18 @@ object Versioned {
   def resolveLatest(dir: String, prefix: String): Option[String] =
     versionNames(dir, prefix).headOption.map(n => s"$dir/$n")
 
-  /** The newest object of `prefix`. Its schema is read from ONE footer
+  /** The newest object of `prefix`, read by [[readObject]]. */
+  def readLatest(spark: SparkSession, dir: String, prefix: String): DataFrame =
+    readObject(spark, resolveLatest(dir, prefix).getOrElse(
+      throw new IllegalArgumentException(s"no versioned object for prefix '$prefix' in $dir")))
+
+  /** The versioned object at `path`. Its schema is read from ONE footer
     * of the object's top-level data files on the driver (an object is
     * one write, so it has one schema) and handed to the reader, so the
     * read launches no schema-inference job. An object whose top level
     * holds no data file (e.g. a partitioned layout) lets Spark infer.
     */
-  def readLatest(spark: SparkSession, dir: String, prefix: String): DataFrame = {
-    val path = resolveLatest(dir, prefix).getOrElse(
-      throw new IllegalArgumentException(s"no versioned object for prefix '$prefix' in $dir"))
+  def readObject(spark: SparkSession, path: String): DataFrame = {
     val conf = GraftShim.hadoopConf(spark)
     dataFiles(conf, new Path(path)).flatMap(_.headOption) match {
       case Some(f) =>
@@ -490,32 +490,11 @@ object Versioned {
     val (mTag, entries) = latestManifest(dir, manifestPrefix).getOrElse(
       throw new IllegalArgumentException(
         s"no manifest for prefix '$manifestPrefix' in $dir"))
-    readPinned(spark, dir, manifestPrefix, mTag, entries, objPrefix)
-  }
-
-  /** [[readAtManifest]] against a SPECIFIC manifest generation — object
-    * -lane time travel: within the [[gcThroughManifest]] retention
-    * window, every committed tag is a readable consistent snapshot.
-    */
-  def readAtManifestTag(spark: SparkSession, dir: String,
-                        manifestPrefix: String, tag: String,
-                        objPrefix: String): DataFrame = {
-    val entries = manifestAt(dir, manifestPrefix, tag).getOrElse(
-      throw new IllegalArgumentException(
-        s"no manifest '$manifestPrefix' @ '$tag' in $dir — never " +
-          "committed, or outside the GC retention window"))
-    readPinned(spark, dir, manifestPrefix, tag, entries, objPrefix)
-  }
-
-  private def readPinned(spark: SparkSession, dir: String,
-                         manifestPrefix: String, mTag: String,
-                         entries: Map[String, String],
-                         objPrefix: String): DataFrame = {
     val tag = entries.getOrElse(objPrefix,
       throw new IllegalArgumentException(
         s"manifest '$manifestPrefix' @ '$mTag' does not pin '$objPrefix' " +
           s"(pins: ${entries.keys.mkString(", ")})"))
-    spark.read.parquet(s"$dir/${objPrefix}__${tag}__.parquet")
+    readObject(spark, s"$dir/${objPrefix}__${tag}__.parquet")
   }
 
   /** Manifest-level retention GC: keep the newest `keepLast` manifest

@@ -30,6 +30,37 @@ import graft.ops.IncrementalAgg
   * when the value domain is bounded — the q348 histogram-median cycle
   * folds per-bucket counts, so only truly unbounded holistic aggregates
   * remain full-reprocess-only.
+  *
+  * The cycles form a matrix of index families × storage lanes. The
+  * trips/topology family (preprocess → validate → merge_trips → export)
+  * is written once, [[topologyCycle]], and runs over four lanes, each a
+  * [[TopologyLane]]: object-versioned ([[objectLane]]), object-versioned
+  * behind a multi-root manifest ([[manifestLane]]), in-place
+  * month-partitioned ([[inPlaceLane]]) and generation-pinned snapshot
+  * ([[snapshotLane]]). Contracts shared by every lane:
+  *
+  *  - a correction keeps its device-day: a re-submission edits
+  *    catches, never the landing day (the reference's sync replaces
+  *    submission content keyed by `_id`, R/validation.R:968-1090), and
+  *    a re-ingested trip keeps its landing_date. On month-partitioned
+  *    lanes this is what locates every retracted or replaced row in a
+  *    month the batch itself names; a feed whose corrections move
+  *    records across days needs a narrow id→month directory first;
+  *  - tombstones (`tombPrefix`: rows carrying `submission_id`, plus
+  *    the target's `month` on month-partitioned lanes) win over the
+  *    delta: a tombstoned id leaves the survey state, its matches
+  *    un-merge into trip-only pass-throughs, and nothing re-enters;
+  *  - every stage reads only versioned state and the delta objects,
+  *    never raw history (IncrementalSpec pins the scan set); the
+  *    q387–q424 oracles are the FULL reprocess, so green proves the
+  *    composition;
+  *  - materialization follows one rule: the touched-key set is
+  *    checkpointed in every lane (the merge publish references it five
+  *    times), the delta's contributions are persisted (the touched set
+  *    and the survey publish read them), and a lane materializes a
+  *    frame before overwriting its own source in place. Nothing else
+  *    is, apart from the composition table inside
+  *    [[derivedExportProducts]].
   */
 object Incremental {
 
@@ -140,7 +171,7 @@ object Incremental {
     * same sizing rule as [[graft.io.Versioned]]'s `filesPerPartition`).
     * Requires integral ids; a string-keyed corpus maps through a narrow
     * id-directory table first (the same escape hatch as month-moving
-    * edits in [[chainedTripsPartitionedCycle]]).
+    * edits in [[topologyCycle]]).
     */
   def idBucket(id: Column, width: Long): Column = {
     require(width > 0, s"idBucket width must be positive, got $width")
@@ -162,7 +193,7 @@ object Incremental {
     * rewrite exactly their own buckets (the bucket is a pure function
     * of the id, so a replaced id's stale rows provably live in a bucket
     * the delta itself names — the same locating contract as
-    * resubmission months in [[chainedTripsPartitionedCycle]]).
+    * resubmission months in [[topologyCycle]]).
     *
     * Candidate generation is unchanged (delta bands ⋈ FULL prior band
     * rows — any historical doc can collide with a delta doc, so the
@@ -564,7 +595,7 @@ object Incremental {
     surveyProcess(raw, lw, Seq("district", "month"))
 
   /** [[surveyProcess]] with an explicit carry set — the full-topology
-    * cycle ([[chainedTripsCycle]]) additionally threads the merge keys
+    * cycle ([[topologyCycle]]) additionally threads the merge keys
     * (imei, landing_date) through the Generate nodes so the trip merge
     * never joins back to re-derive them.
     */
@@ -638,7 +669,7 @@ object Incremental {
 
   /** [[submissionContrib]] with extra per-submission key columns
     * (functionally dependent on the submission — e.g. the merge keys
-    * imei + landing_date for [[chainedTripsCycle]]).
+    * imei + landing_date for [[topologyCycle]]).
     */
   def submissionContrib(clean: DataFrame, extraKeys: Seq[String]): DataFrame =
     clean.groupBy(col("submission_id") +: col("district") +: col("month") +:
@@ -685,529 +716,345 @@ object Incremental {
       .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents"))
   }
 
-  /** The COMPLETE reference topology as one delta-only cycle:
-    * raw → preprocess → validate → merge_trips → export
+  /** One storage lane of the trips/topology family: where
+    * [[topologyCycle]] reads and publishes its three state roots (survey
+    * contributions, trips, the published gated merge). The shape of
+    * [[graft.io.LakeTable.SnapshotStage]]: a lane value serves ONE
+    * cycle and remembers what that cycle has published, so a later
+    * stage reads the cycle's own output for the roots (and months) it
+    * already rewrote and the prior state for everything else; nothing
+    * is visible to readers before [[commit]]. Build one with
+    * [[objectLane]], [[manifestLane]], [[inPlaceLane]] or
+    * [[snapshotLane]].
+    */
+  sealed abstract class TopologyLane {
+    /** The roots are month-partitioned — the survey state by `month`,
+      * trips and merge by `lmonth` = month(landing_date) — so the cycle
+      * collects its touched-month sets and reads and rewrites only
+      * those months.
+      */
+    def monthly: Boolean
+    /** The cycle's tag is already committed: an exact replay, which
+      * serves the committed export and publishes nothing.
+      */
+    def committed: Boolean = false
+    /** `prefix` at the cycle's view, restricted to `months` when given
+      * (month-partitioned lanes only).
+      */
+    def read(prefix: String, partCol: String,
+             months: Option[Seq[Any]]): DataFrame
+    /** Publish `df` as the cycle's version of `prefix`; `months` names
+      * every partition the cycle may have changed (None when the lane
+      * is not month-partitioned).
+      */
+    def publish(prefix: String, partCol: String, df: DataFrame,
+                months: Option[Seq[Any]]): Unit
+    /** Make every publish of the cycle visible to readers at once. */
+    def commit(): Unit = ()
+    /** The prior rows of `full` (the retraction months of `prefix`)
+      * that may hold `ids`: `full` itself, or a subset read through a
+      * pinned sidecar ([[retractionPriorRows]]).
+      */
+    def priorRows(prefix: String, months: Option[Seq[Any]], ids: DataFrame,
+                  full: DataFrame): DataFrame = full
+  }
+
+  /** Object-versioned lane: priors are each prefix's newest object, and
+    * each root publishes as a new full object `prefix + "_next"` at
+    * `tag` (a distinct prefix, so a re-run in one process never resolves
+    * its own output as prior state).
+    */
+  def objectLane(spark: SparkSession, dir: String,
+                 tag: String): TopologyLane =
+    new ObjectLane(spark, dir, None, tag)
+
+  /** [[objectLane]] behind an atomic multi-root manifest
+    * ([[graft.io.Versioned.commitManifest]]): priors resolve through the
+    * newest manifest, never "latest"; the next versions land under `tag`
+    * in the same prefixes, invisible until ONE manifest naming all three
+    * pins commits last. A half-published trio stays unreadable (rollback
+    * instead of replay alone, ManifestSpec), a stale concurrent cycle
+    * fails loudly at the commit, and a cycle whose tag the manifest
+    * already pins is an exact replay.
+    */
+  def manifestLane(spark: SparkSession, dir: String, manifestPrefix: String,
+                   tag: String): TopologyLane =
+    new ObjectLane(spark, dir, Some(manifestPrefix), tag)
+
+  private final class ObjectLane(spark: SparkSession, dir: String,
+                                 manifest: Option[String], tag: String)
+      extends TopologyLane {
+    private val published = scala.collection.mutable.Map.empty[String, String]
+    val monthly = false
+    override val committed: Boolean =
+      manifest.exists(Versioned.latestManifest(dir, _).exists(_._1 == tag))
+    def read(prefix: String, partCol: String,
+             months: Option[Seq[Any]]): DataFrame =
+      published.get(prefix) match {
+        case Some(path) => Versioned.readObject(spark, path)
+        case None => manifest.fold(Versioned.readLatest(spark, dir, prefix))(
+          Versioned.readAtManifest(spark, dir, _, prefix))
+      }
+    def publish(prefix: String, partCol: String, df: DataFrame,
+                months: Option[Seq[Any]]): Unit =
+      published(prefix) = Versioned.write(df, dir,
+        if (manifest.isEmpty) prefix + "_next" else prefix, tag)
+    override def commit(): Unit = manifest.foreach { m =>
+      Versioned.commitManifest(dir, m, tag, published.keys.map(_ -> tag).toMap)
+      ()
+    }
+  }
+
+  /** In-place month-partitioned lane ([[graft.io.Versioned
+    * .partitionedRoot]]): each root is one stable directory and a publish
+    * dynamic-overwrites only its touched months ([[graft.io.Versioned
+    * .overwriteTouchedPartitions]]) — untouched months are never listed,
+    * read or rewritten (PartitionedStateSpec pins them byte-identical).
+    * Every publish reads the root it overwrites, so its frame is
+    * materialized first. No rollback: a reader between two publishes
+    * sees a mixed trio, and a crashed cycle recovers by re-applying its
+    * batch, which is idempotent.
+    */
+  def inPlaceLane(spark: SparkSession, dir: String): TopologyLane =
+    new InPlaceLane(spark, dir)
+
+  private final class InPlaceLane(spark: SparkSession, dir: String)
+      extends TopologyLane {
+    val monthly = true
+    def read(prefix: String, partCol: String,
+             months: Option[Seq[Any]]): DataFrame =
+      months.fold(Versioned.readPartitioned(spark, dir, prefix))(
+        Versioned.readPartitions(spark, dir, prefix, partCol, _))
+    def publish(prefix: String, partCol: String, df: DataFrame,
+                months: Option[Seq[Any]]): Unit = {
+      Versioned.overwriteTouchedPartitions(
+        graft.ext.Exec.checkpointEager(df), dir, prefix, partCol, months.get)
+      ()
+    }
+  }
+
+  /** Generation-pinned snapshot lane, through
+    * [[graft.io.LakeTable.SnapshotStage]]: touched months write new
+    * `(month, gen)` leaves (prior generations are never modified), later
+    * stages read the staged mixed view, and ONE manifest commit at tag
+    * `gen` flips all three roots — readers see the whole prior trio or
+    * the whole new one (SnapshotLaneSpec simulates the crash). A month a
+    * cycle empties leaves the pin map; superseded generations reclaim
+    * through [[graft.io.Versioned.gcSnapshotGenerations]], which leaves
+    * time travel inside the retention window. When the manifest pins a
+    * `submission_id` bloom sidecar for the survey state, the retraction
+    * reads only the files that may hold a re-submitted id
+    * ([[retractionPriorRows]]); the stage re-derives the sidecar on
+    * every publish.
+    */
+  def snapshotLane(spark: SparkSession, dir: String, manifestPrefix: String,
+                   gen: String): TopologyLane =
+    new SnapshotLane(spark, dir, manifestPrefix, gen)
+
+  private final class SnapshotLane(spark: SparkSession, dir: String,
+                                   manifestPrefix: String, gen: String)
+      extends TopologyLane {
+    private val stage = graft.io.LakeTable.stage(spark, dir, manifestPrefix,
+      gen)
+    val monthly = true
+    override val committed: Boolean = stage.alreadyCommitted
+    def read(prefix: String, partCol: String,
+             months: Option[Seq[Any]]): DataFrame =
+      stage.read(prefix, partCol, months)
+    def publish(prefix: String, partCol: String, df: DataFrame,
+                months: Option[Seq[Any]]): Unit = {
+      stage.publish(prefix, partCol, df, months.get)
+      ()
+    }
+    override def commit(): Unit = { stage.commit(); () }
+    override def priorRows(prefix: String, months: Option[Seq[Any]],
+                           ids: DataFrame, full: DataFrame): DataFrame =
+      retractionPriorRows(spark, dir, stage, prefix, months.get, ids, full)
+  }
+
+  /** What a [[topologyCycle]] exports from its published state. */
+  sealed trait TopologyExport
+  object TopologyExport {
+    /** The trip-enriched monthly rollup of the published merge:
+      * (district, month, n_rows, sum_cents, n_matched, dur_sec), survey
+      * rows only (unmatched trips stay in the merge for the GPS lane).
+      */
+    case object Monthly extends TopologyExport
+    /** The monthly rollup joined with the derived dashboard products of
+      * the survey state ([[derivedExportProducts]]: top-`topN` +
+      * "Other" composition and the JSON doc), one row per composition
+      * entry. The survey state keeps TAXON grain, the minimum the
+      * composition re-derives from.
+      */
+    final case class Products(topN: Int) extends TopologyExport
+    /** [[Products]] kept as two month-partitioned in-place roots — the
+      * rollup by merge-touched month, the composition + doc by
+      * survey-touched month — of which a cycle re-derives and overwrites
+      * only its touched months (rank, share and doc are all within one
+      * (district, month), so untouched months cannot change). Returns
+      * the full export read back from the two roots. Month-partitioned
+      * lanes only.
+      */
+    final case class TouchedProducts(topN: Int, rollupPrefix: String,
+                                     compPrefix: String) extends TopologyExport
+  }
+
+  /** The COMPLETE reference topology as one delta-only cycle — raw →
+    * preprocess → validate → merge_trips → export
     * (R/preprocessing-surveys.R:69-74 → R/validation.R:519-524 →
-    * R/merge-trips.R:44-73 → R/export.R:506-511). This composes the
-    * resubmission-aware survey chain (q378's submission-grain
-    * retraction) with the gated trip merge ([[gatedMergeCycle]]'s
-    * retract-and-remerge), so the LAST reference stage joins the
-    * incremental DAG and the whole nightly topology touches only
-    * deltas and rolled-up state:
+    * R/merge-trips.R:44-73 → R/export.R:506-511) — over any
+    * [[TopologyLane]]. The four stages:
     *
-    *  1. the survey delta (new + resubmitted nested submissions) runs
-    *     [[surveyProcess]] with the merge keys (imei, landing_date)
-    *     carried through the Generate nodes; per-submission
-    *     contributions RETRACT stale rows by submission-id anti-join
-    *     and fold in (an edit that now fails validation simply
-    *     disappears);
-    *  2. the trips delta appends to the trips side state;
-    *  3. the published gated merge retracts every (imei, landing_date)
-    *     key touched by new contributions, RETRACTED prior
-    *     contributions, or delta trips, and re-runs the 1:1 gate on
-    *     just those keys' accumulated rows — late trips un-merge or
-    *     fuse exactly as in [[gatedMergeCycle]];
-    *  4. the export derives from the published merge ALONE: monthly
-    *     per-district rows with survey counts, exact cents, matched-
-    *     trip counts, and matched trip time.
+    *  1. the survey delta (new and re-submitted nested submissions,
+    *     merge keys carried through the Generate nodes) runs
+    *     [[surveyProcess]]; per-submission contributions RETRACT the
+    *     stored rows of every re-submitted or tombstoned id (an edit
+    *     that now fails validation simply disappears) and fold in;
+    *  2. the trips delta folds in by `trip_id`: a re-ingested trip
+    *     REPLACES its row, so a re-applied batch is idempotent;
+    *  3. every (imei, landing_date) key touched by a new contribution, a
+    *     retracted one or a delta trip re-runs the 1:1 gate over its
+    *     accumulated rows ([[gatedMergeCycle]]'s retract-and-remerge —
+    *     late trips un-merge or fuse); taxon-grain contributions roll up
+    *     to submission grain first, because the gate counts SUBMISSIONS
+    *     per device-day;
+    *  4. the export derives from the published state alone.
     *
-    * Every stage consumes only versioned objects (IncrementalSpec pins
-    * the whole chain's relation set); the q387 oracle is the FULL
-    * four-stage reprocess, so green proves the end-to-end composition.
+    * The lane contracts are in the [[Incremental]] doc.
     *
-    * @return (district, month, n_rows, sum_cents, n_matched, dur_sec)
+    * @return the export `export` names, read from the published state
     */
-  def chainedTripsCycle(spark: SparkSession, dir: String,
-                        surveyStatePrefix: String, tripsStatePrefix: String,
-                        mergedPrefix: String, surveyRawPrefix: String,
-                        tripsRawPrefix: String, lw: DataFrame,
-                        newTag: String): DataFrame =
-    chainedTripsImpl(spark, dir, surveyStatePrefix, tripsStatePrefix,
-      mergedPrefix, surveyRawPrefix, tripsRawPrefix,
-      spark.range(0).select(col("id").as("submission_id")), lw, newTag)
-
-  /** [[chainedTripsCycle]] with a TAKEDOWN batch — the deletion lane
-    * (q385/q386's third state mutation) wired through the COMPLETE
-    * topology: tombstoned submission ids retract their contribution
-    * rows from the survey state with NOTHING re-entering, their
-    * device-day keys re-run the 1:1 gate (a deleted survey's published
-    * match un-merges into a trip-only pass-through), and the
-    * state-derived export forgets them — one cycle, no raw-history
-    * scan. Tombstones take precedence over the delta: an id in both
-    * is deleted, not re-ingested.
-    *
-    * @return (district, month, n_rows, sum_cents, n_matched, dur_sec)
-    */
-  def chainedTakedownCycle(spark: SparkSession, dir: String,
-                           surveyStatePrefix: String,
-                           tripsStatePrefix: String, mergedPrefix: String,
-                           surveyRawPrefix: String, tripsRawPrefix: String,
-                           tombPrefix: String, lw: DataFrame,
-                           newTag: String): DataFrame =
-    chainedTripsImpl(spark, dir, surveyStatePrefix, tripsStatePrefix,
-      mergedPrefix, surveyRawPrefix, tripsRawPrefix,
-      Versioned.readLatest(spark, dir, tombPrefix)
-        .select(col("submission_id")).distinct(),
-      lw, newTag)
-
-  private def chainedTripsImpl(spark: SparkSession, dir: String,
-                               surveyStatePrefix: String,
-                               tripsStatePrefix: String,
-                               mergedPrefix: String,
-                               surveyRawPrefix: String,
-                               tripsRawPrefix: String, tombIds: DataFrame,
-                               lw: DataFrame, newTag: String): DataFrame = {
+  def topologyCycle(spark: SparkSession, dir: String, lane: TopologyLane,
+                    surveyStatePrefix: String, tripsStatePrefix: String,
+                    mergedPrefix: String, surveyRawPrefix: String,
+                    tripsRawPrefix: String, tombPrefix: Option[String],
+                    lw: DataFrame, export: TopologyExport): DataFrame = {
+    import TopologyExport._
+    require(lane.monthly || !export.isInstanceOf[TouchedProducts],
+      "touched export products need month-partitioned state roots")
+    val taxon = export != Monthly
     val keys = Seq("imei", "landing_date")
     val keyCols = keys.map(col)
-    val sState = Versioned.readLatest(spark, dir, surveyStatePrefix)
-    val tState = Versioned.readLatest(spark, dir, tripsStatePrefix)
-    val mPrior = Versioned.readLatest(spark, dir, mergedPrefix)
+    val lmonth = trunc(col("landing_date"), "month")
+    // trips and merge rows partition by the derived `lmonth`: added on
+    // publish, dropped on read (a no-op on unpartitioned lanes)
+    def readByDay(prefix: String, months: Option[Seq[Any]]) =
+      lane.read(prefix, "lmonth", months).drop("lmonth")
+    def publishByDay(prefix: String, df: DataFrame,
+                     months: Option[Seq[Any]]): Unit =
+      lane.publish(prefix, "lmonth",
+        if (lane.monthly) df.withColumn("lmonth", lmonth) else df, months)
+    // touched months: bounded by the calendar, collected on the driver,
+    // and only where the roots are month-partitioned
+    def monthsOf(df: DataFrame): Option[Seq[Any]] =
+      if (lane.monthly) Some(df.distinct().collect().map(_.get(0)).toSeq)
+      else None
+    def exported(): DataFrame = export match {
+      case Monthly => monthlyExport(readByDay(mergedPrefix, None))
+      case Products(topN) =>
+        derivedExportProducts(lane.read(surveyStatePrefix, "month", None),
+          topN).join(monthlyExport(readByDay(mergedPrefix, None)),
+          Seq("district", "month"))
+      case TouchedProducts(_, rollupPrefix, compPrefix) =>
+        Versioned.readPartitioned(spark, dir, compPrefix)
+          .join(Versioned.readPartitioned(spark, dir, rollupPrefix),
+            Seq("district", "month"))
+          .select(col("district"), col("month"), col("rnk"), col("taxon"),
+            col("cents"), col("pct_milli"), col("doc"), col("n_rows"),
+            col("sum_cents"), col("n_matched"), col("dur_sec"))
+    }
+    if (lane.committed) return exported()
     val sDelta = Versioned.readLatest(spark, dir, surveyRawPrefix)
     val tDelta = Versioned.readLatest(spark, dir, tripsRawPrefix)
-    // stages 1+2: preprocess + validate the survey delta alone, keep
-    // contributions at submission grain (retraction = stored row).
-    // Tombstones are authoritative: a tombstoned id's fresh rows never
-    // enter. Persisted: contrib feeds the state write AND (twice, via
-    // the touched-key set) the re-merge write — Spark has no
-    // cross-branch CSE, so unpersisted it would re-run the whole
-    // reshape+flags chain per consumer (the q47 lesson; measured
-    // 15.0 s → fixture-bound seconds on the q387 bench entry)
-    val contrib = submissionContrib(
-      surveyProcess(sDelta, lw, Seq("district", "month") ++ keys), keys)
-      .join(tombIds, Seq("submission_id"), "left_anti")
+    val tomb = tombPrefix.map(Versioned.readLatest(spark, dir, _))
+    val tombIds = tomb.map(_.select(col("submission_id")).distinct())
+    // persisted: the touched set and the survey publish both consume it,
+    // and unpersisted each would re-run the whole reshape + flags chain
+    val contrib = tombIds.foldLeft(submissionContrib(
+        surveyProcess(sDelta, lw, Seq("district", "month") ++ keys),
+        if (taxon) keys :+ "catch_taxon" else keys))(
+        _.join(_, Seq("submission_id"), "left_anti"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // every consumer of contrib is an EAGER Versioned.write inside this
-    // try (the returned export plan reads only the published mPath), so
-    // the cache can release before return — a long bench session never
-    // accumulates these blocks
-    val mPath = try {
+    // every consumer of contrib is an eager publish inside this try, so
+    // the cache releases before the lazy export is returned
+    val (sMonths, kMonths) = try {
       // gone = re-ingested (replaced below) ∪ tombstoned (never replaced)
-      val goneIds = sDelta.select(col("submission_id")).distinct()
-        .unionByName(tombIds).distinct()
-      val retracted = sState.join(goneIds, Seq("submission_id"), "left_semi")
-      val sPath = Versioned.write(
-        sState.join(goneIds, Seq("submission_id"), "left_anti")
-          .unionByName(contrib),
-        dir, surveyStatePrefix + "_next", newTag)
-      val tPath = Versioned.write(tState.unionByName(tDelta), dir,
-        tripsStatePrefix + "_next", newTag)
-      // stage 3: gated trip merge, retract-and-remerge on touched keys.
-      // touched is CHECKPOINTED (the partitioned twin's discipline):
-      // the merged write references it five times (twice per merge side
-      // through the count-attach self-join, once in the prior anti-
-      // join), and each reference would re-evaluate the full sState
-      // scan + semi-join + distinct under it — probe-measured as the
-      // dominant slice of the merged publish. The frame is O(delta
-      // keys) tiny.
+      val goneIds = tombIds.foldLeft(
+        sDelta.select(col("submission_id")).distinct())(
+        _.unionByName(_).distinct())
+      val sMonths = monthsOf(tomb.foldLeft(sDelta.select(col("month")))(
+        (m, t) => m.unionByName(t.select(col("month")))))
+      val sPrior = lane.read(surveyStatePrefix, "month", sMonths)
+      // read before any publish, so the retracted keys are the PRIOR ones
       val touched = graft.ext.Exec.checkpointEager(
         contrib.select(keyCols: _*)
-          .unionByName(retracted.select(keyCols: _*))
+          .unionByName(lane.priorRows(surveyStatePrefix, sMonths, goneIds,
+              sPrior)
+            .join(goneIds, Seq("submission_id"), "left_semi")
+            .select(keyCols: _*))
           .unionByName(tDelta.select(keyCols: _*)).distinct())
-      val remerged = graft.ops.GatedMerge.gatedOneToOne(
-        spark.read.parquet(sPath).join(touched, keys, "left_semi"),
-        spark.read.parquet(tPath).join(touched, keys, "left_semi"), keys)
-      Versioned.write(mPrior.join(touched, keys, "left_anti")
-          .unionByName(remerged.select(mPrior.columns.map(col): _*)),
-        dir, mergedPrefix + "_next", newTag)
+      val kMonths = monthsOf(touched.select(lmonth))
+      lane.publish(surveyStatePrefix, "month",
+        sPrior.join(goneIds, Seq("submission_id"), "left_anti")
+          .unionByName(contrib), sMonths)
+      val tMonths = monthsOf(tDelta.select(lmonth))
+      publishByDay(tripsStatePrefix, readByDay(tripsStatePrefix, tMonths)
+        .join(tDelta.select(col("trip_id")), Seq("trip_id"), "left_anti")
+        .unionByName(tDelta), tMonths)
+      val sSide = lane.read(surveyStatePrefix, "month", kMonths)
+      publishByDay(mergedPrefix, remergeTouched(
+        readByDay(mergedPrefix, kMonths),
+        if (!taxon) sSide
+        else sSide.groupBy(col("submission_id") +: col("district") +:
+            col("month") +: keyCols: _*)
+          .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents")),
+        readByDay(tripsStatePrefix, kMonths), touched, keys), kMonths)
+      (sMonths, kMonths)
     } finally contrib.unpersist(blocking = false)
-    // stage 4: export from the published merge alone — survey-bearing
-    // rows only (the reference's export is survey-centric; unmatched
-    // trips stay in the published merge for the dashboard's GPS lane)
-    spark.read.parquet(mPath)
-      .filter(col("submission_id").isNotNull)
-      .groupBy(col("district"), col("month"))
-      .agg(sum(col("n")).as("n_rows"),
-        sum(col("sum_cents")).as("sum_cents"),
-        count(col("trip_id")).as("n_matched"),
-        coalesce(sum(when(col("trip_id").isNotNull, col("duration_sec"))),
-          lit(0L)).as("dur_sec"))
+    lane.commit()
+    export match {
+      case TouchedProducts(topN, rollupPrefix, compPrefix) =>
+        // the rollup of month m reads partition lmonth = m alone: a
+        // survey row's month is its landing month (preprocess contract)
+        Versioned.overwriteTouchedPartitions(
+          monthlyExport(readByDay(mergedPrefix, kMonths)), dir, rollupPrefix,
+          "month", kMonths.get)
+        Versioned.overwriteTouchedPartitions(derivedExportProducts(
+            lane.read(surveyStatePrefix, "month", sMonths), topN),
+          dir, compPrefix, "month", sMonths.get)
+      case _ =>
+    }
+    exported()
   }
 
-  /** [[chainedTripsCycle]] published through an ATOMIC MULTI-ROOT
-    * MANIFEST ([[graft.io.Versioned.commitManifest]]) — the crash
-    * window between the three state publishes closed with rollback
-    * semantics instead of replay-idempotence alone. The cycle:
-    *
-    *  1. resolves all three prior states THROUGH the newest manifest
-    *     (never "latest" — a half-published trio is invisible);
-    *  2. publishes the three next versions under `newTag` into the SAME
-    *     prefixes (plain versioned objects; a crash here strands
-    *     unreferenced versions that [[graft.io.Versioned
-    *     .gcThroughManifest]] later reclaims, but no reader can see
-    *     them);
-    *  3. commits one manifest naming all three `newTag` pins, LAST,
-    *     with tag monotonicity enforced — a stale concurrent cycle
-    *     fails loudly HERE, before any reader could resolve its
-    *     objects. An exact replay whose tag the manifest ALREADY pins
-    *     short-circuits at entry and serves from the committed
-    *     snapshot: recomputing would resolve its own output as prior
-    *     state (an at-least-once retry of a COMPLETED cycle must
-    *     succeed without effect, not reprocess).
-    *
-    * Readers that resolve through the manifest therefore always see one
-    * consistent snapshot: either the full prior trio or the full new
-    * trio, never a mix (ManifestSpec simulates the crash and pins
-    * both sides). This is the minimal slice of a table format the
-    * object lane needs — one CAS-able key — without reinventing one.
+  /** The trip-enriched monthly export of a published merge: survey-
+    * bearing rows per (district, month) with their counts, exact cents,
+    * matched trips and matched trip time.
     *
     * @return (district, month, n_rows, sum_cents, n_matched, dur_sec)
     */
-  def chainedTripsManifestCycle(spark: SparkSession, dir: String,
-                                manifestPrefix: String,
-                                surveyStatePrefix: String,
-                                tripsStatePrefix: String,
-                                mergedPrefix: String,
-                                surveyRawPrefix: String,
-                                tripsRawPrefix: String, lw: DataFrame,
-                                newTag: String): DataFrame = {
-    val keys = Seq("imei", "landing_date")
-    val keyCols = keys.map(col)
-    def exportOf(merged: DataFrame): DataFrame = merged
-      .filter(col("submission_id").isNotNull)
+  private[graft] def monthlyExport(merged: DataFrame): DataFrame =
+    merged.filter(col("submission_id").isNotNull)
       .groupBy(col("district"), col("month"))
       .agg(sum(col("n")).as("n_rows"),
         sum(col("sum_cents")).as("sum_cents"),
         count(col("trip_id")).as("n_matched"),
         coalesce(sum(when(col("trip_id").isNotNull, col("duration_sec"))),
           lit(0L)).as("dur_sec"))
-    // exact-replay short-circuit: a cycle whose tag the manifest already
-    // pins has ALREADY committed — recomputing would resolve its own
-    // output as prior state and overwrite the very objects its plan
-    // scans. An at-least-once driver retry lands here: serve from the
-    // committed snapshot, touch nothing. (A manifest NEWER than newTag
-    // falls through and fails loudly at commit — the stale-writer path.)
-    if (Versioned.latestManifest(dir, manifestPrefix)
-        .exists(_._1 == newTag))
-      return exportOf(
-        Versioned.readAtManifest(spark, dir, manifestPrefix, mergedPrefix))
-    val sState = Versioned.readAtManifest(spark, dir, manifestPrefix,
-      surveyStatePrefix)
-    val tState = Versioned.readAtManifest(spark, dir, manifestPrefix,
-      tripsStatePrefix)
-    val mPrior = Versioned.readAtManifest(spark, dir, manifestPrefix,
-      mergedPrefix)
-    val sDelta = Versioned.readLatest(spark, dir, surveyRawPrefix)
-    val tDelta = Versioned.readLatest(spark, dir, tripsRawPrefix)
-    val contrib = submissionContrib(
-      surveyProcess(sDelta, lw, Seq("district", "month") ++ keys), keys)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mPath = try {
-      val goneIds = sDelta.select(col("submission_id")).distinct()
-      val retracted = sState.join(goneIds, Seq("submission_id"), "left_semi")
-      val sPath = Versioned.write(
-        sState.join(goneIds, Seq("submission_id"), "left_anti")
-          .unionByName(contrib),
-        dir, surveyStatePrefix, newTag)
-      // trip_id-keyed replacement (not a plain append): a delta that
-      // re-ingests a corrected trip replaces its row — and should a
-      // caller ever bypass the replay short-circuit, re-application
-      // stays idempotent (the partitioned lane's contract)
-      val tPath = Versioned.write(
-        tState.join(tDelta.select(col("trip_id")), Seq("trip_id"),
-            "left_anti")
-          .unionByName(tDelta),
-        dir, tripsStatePrefix, newTag)
-      // touched checkpointed for the same reason as [[chainedTripsImpl]]:
-      // five references in the merged-write plan, each re-running the
-      // sState semi-join + distinct otherwise; O(delta keys) tiny
-      val touched = graft.ext.Exec.checkpointEager(
-        contrib.select(keyCols: _*)
-          .unionByName(retracted.select(keyCols: _*))
-          .unionByName(tDelta.select(keyCols: _*)).distinct())
-      val remerged = graft.ops.GatedMerge.gatedOneToOne(
-        spark.read.parquet(sPath).join(touched, keys, "left_semi"),
-        spark.read.parquet(tPath).join(touched, keys, "left_semi"), keys)
-      val mp = Versioned.write(mPrior.join(touched, keys, "left_anti")
-          .unionByName(remerged.select(mPrior.columns.map(col): _*)),
-        dir, mergedPrefix, newTag)
-      // the commit point: all three roots flip for every reader at once
-      Versioned.commitManifest(dir, manifestPrefix, newTag, Map(
-        surveyStatePrefix -> newTag, tripsStatePrefix -> newTag,
-        mergedPrefix -> newTag))
-      mp
-    } finally contrib.unpersist(blocking = false)
-    exportOf(spark.read.parquet(mPath))
-  }
 
-  /** The COMPLETE topology cycle over MONTH-PARTITIONED state — the
-    * 100 TB publish path. [[chainedTripsCycle]] proves every stage's
-    * COMPUTE is O(state + delta), but its publish rewrites each full
-    * accumulated state as a new object version: O(|state|) write I/O
-    * per nightly run, which does not survive the scale target. This
-    * variant keeps each state in ONE stable directory partitioned by
-    * month ([[graft.io.Versioned.partitionedRoot]]) and publishes via
-    * dynamic-partition-overwrite of ONLY the touched months
-    * ([[graft.io.Versioned.overwriteTouchedPartitions]]): untouched
-    * month directories are neither listed, read, nor rewritten
-    * (PartitionedStateSpec pins their files byte-identical across a
-    * cycle and certifies the bytes-written drop against the
-    * object-versioned twin on the same fixture).
-    *
-    * Semantics are IDENTICAL to [[chainedTripsCycle]] — the q390 oracle
-    * is the same full four-stage reprocess as q387's — only the state
-    * layout changes:
-    *
-    *  - survey contribution state partitions by `month`. Retraction
-    *    locates a resubmitted id's prior rows through the DELTA's own
-    *    months: `month` derives from `landing_date` in preprocess and a
-    *    resubmission edits catches, never the landing day (the
-    *    reference's sync replaces submission content keyed by `_id`,
-    *    R/validation.R:968-1090), so the prior contribution provably
-    *    lives in a month the delta itself names — no id→partition
-    *    directory lookup, no full-state scan. A pipeline whose edits
-    *    could MOVE a submission across months would need that directory
-    *    (a narrow two-column table, not a state scan).
-    *  - trips state partitions by `lmonth` = month(landing_date);
-    *    deltas append into their own months.
-    *  - the published merge partitions by `lmonth` (both sides carry
-    *    the merge keys, so every row has one). The re-merge reads ONLY
-    *    the touched keys' months (partition-pruned literal `isin`) and
-    *    rewrites only those partitions.
-    *
-    * Touched-month sets are collected driver-side — bounded by the
-    * calendar, the same bounded-collect discipline as the suite's
-    * argmax seeds. Rewritten partition content is checkpointed before
-    * the overwrite (a dynamic overwrite must not be lineage-backed by a
-    * scan of its own target).
-    *
-    * CONTRACT — replays keep `landing_date` fixed: the trips append is
-    * keyed by `trip_id` so a replayed batch REPLACES instead of
-    * duplicating, but the replacement anti-join prunes to the DELTA's
-    * own `lmonth` partitions. A replayed trip whose landing_date (hence
-    * month) CHANGED would leave its stale row in the old partition and
-    * duplicate the trip_id. Same contract as resubmission retraction:
-    * edits never move a record across months; a feed where they can
-    * needs a narrow id→month directory table resolved first.
-    *
-    * @return (district, month, n_rows, sum_cents, n_matched, dur_sec) —
-    *         the monthly export from the published merge
+  /** Stage 3 of every retract-and-remerge cycle: the prior published
+    * merge minus every touched key, plus the 1:1 gate re-run over just
+    * the touched keys' side rows. Untouched keys pass through by
+    * reference; the sides are only scanned (semi-joins stream).
     */
-  def chainedTripsPartitionedCycle(spark: SparkSession, dir: String,
-                                   surveyStatePrefix: String,
-                                   tripsStatePrefix: String,
-                                   mergedPrefix: String,
-                                   surveyRawPrefix: String,
-                                   tripsRawPrefix: String,
-                                   lw: DataFrame): DataFrame = {
-    import graft.ext.Exec.checkpointEager
-    val keys = Seq("imei", "landing_date")
-    val keyCols = keys.map(col)
-    val sDelta = Versioned.readLatest(spark, dir, surveyRawPrefix)
-    val tDelta = Versioned.readLatest(spark, dir, tripsRawPrefix)
-    // stages 1+2: preprocess + validate the delta alone (unchanged)
-    val contrib = submissionContrib(
-      surveyProcess(sDelta, lw, Seq("district", "month") ++ keys), keys)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val export = try {
-      val goneIds = sDelta.select(col("submission_id")).distinct()
-      // touched survey months come from the DELTA (see contract above)
-      val sMonths = sDelta.select(col("month")).distinct()
-        .collect().map(_.get(0)).toSeq
-      val sPriorTouched = Versioned.readPartitions(spark, dir,
-        surveyStatePrefix, "month", sMonths)
-      val retractedKeys = checkpointEager(
-        sPriorTouched.join(goneIds, Seq("submission_id"), "left_semi")
-          .select(keyCols: _*).distinct())
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(sPriorTouched
-          .join(goneIds, Seq("submission_id"), "left_anti")
-          .unionByName(contrib)),
-        dir, surveyStatePrefix, "month", sMonths)
-      // trips: append into the delta's own months, keyed by trip_id so
-      // a re-ingested (or replayed) trip REPLACES its row — the
-      // object-versioned lane gets replay safety from its _next-prefix
-      // discipline, but an in-place partitioned publish must be
-      // idempotent under re-application itself (at-least-once delivery;
-      // PartitionedStateSpec pins a full second application changes
-      // nothing)
-      val tMonths = tDelta.select(trunc(col("landing_date"), "month")
-          .as("lmonth")).distinct().collect().map(_.get(0)).toSeq
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(Versioned.readPartitions(spark, dir,
-            tripsStatePrefix, "lmonth", tMonths)
-          .join(tDelta.select(col("trip_id")), Seq("trip_id"), "left_anti")
-          .unionByName(tDelta.withColumn("lmonth",
-            trunc(col("landing_date"), "month")))),
-        dir, tripsStatePrefix, "lmonth", tMonths)
-      // stage 3: retract-and-remerge on touched keys, month-pruned
-      val touched = checkpointEager(contrib.select(keyCols: _*)
-        .unionByName(retractedKeys)
-        .unionByName(tDelta.select(keyCols: _*)).distinct())
-      val kMonths = touched.select(trunc(col("landing_date"), "month")
-          .as("lmonth")).distinct().collect().map(_.get(0)).toSeq
-      val sSide = Versioned.readPartitions(spark, dir, surveyStatePrefix,
-          "month", kMonths)
-        .join(touched, keys, "left_semi")
-      val tSide = Versioned.readPartitions(spark, dir, tripsStatePrefix,
-          "lmonth", kMonths)
-        .drop("lmonth")
-        .join(touched, keys, "left_semi")
-      val remerged = graft.ops.GatedMerge.gatedOneToOne(sSide, tSide, keys)
-      val mPriorTouched = Versioned.readPartitions(spark, dir, mergedPrefix,
-        "lmonth", kMonths)
-      val mCols = mPriorTouched.columns.filterNot(_ == "lmonth").toSeq
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(mPriorTouched.drop("lmonth")
-          .join(touched, keys, "left_anti")
-          .unionByName(remerged.select(mCols.map(col): _*))
-          .withColumn("lmonth", trunc(col("landing_date"), "month"))),
-        dir, mergedPrefix, "lmonth", kMonths)
-      // stage 4: export from the published merge alone (full-export
-      // semantics — the read is rollup-sized, the WRITES above are the
-      // O(touched) part that had to change)
-      Versioned.readPartitioned(spark, dir, mergedPrefix)
-        .filter(col("submission_id").isNotNull)
-        .groupBy(col("district"), col("month"))
-        .agg(sum(col("n")).as("n_rows"),
-          sum(col("sum_cents")).as("sum_cents"),
-          count(col("trip_id")).as("n_matched"),
-          coalesce(sum(when(col("trip_id").isNotNull, col("duration_sec"))),
-            lit(0L)).as("dur_sec"))
-    } finally contrib.unpersist(blocking = false)
-    export
-  }
-
-  /** [[chainedTripsPartitionedCycle]] over the GENERATION-PINNED
-    * snapshot lane — the partitioned topology with the ATOMICITY the
-    * in-place lane trades away. The in-place lane's crash window
-    * between its three root publishes is covered by replay-idempotence
-    * (re-apply the batch), not rollback: a reader DURING the window
-    * sees a mixed trio. Here every touched partition writes into a NEW
-    * `__gen=<gen>` subdirectory ([[graft.io.Versioned
-    * .writeSnapshotPartitions]] — prior generations' files are never
-    * modified, so there is no self-overwrite hazard and no
-    * checkpoint-before-overwrite requirement), and ONE manifest pins
-    * (root, month) → generation for ALL THREE roots at a single atomic
-    * commit ([[graft.io.Versioned.commitManifest]], tag = gen):
-    *
-    *  - readers resolve through the manifest and see either the full
-    *    prior trio or the full new trio — a crashed publish's
-    *    half-written generation dirs are invisible (SnapshotLaneSpec
-    *    simulates the crash);
-    *  - an exact replay (manifest already at `gen`) short-circuits and
-    *    serves from the committed snapshot; a replay of a CRASHED
-    *    publish recomputes from the intact prior pins and rewrites its
-    *    own (month, gen) dirs idempotently;
-    *  - a month the cycle EMPTIES simply leaves the pin map — no
-    *    emptied-directory erase protocol (the in-place lane's
-    *    deleteRecursively contract disappears);
-    *  - writes stay O(touched months); reads stay partition-pruned
-    *    (the (month, gen) disjunction is literal);
-    *  - superseded generations reclaim via [[graft.io.Versioned
-    *    .gcSnapshotGenerations]] under keep-last-N manifest retention,
-    *    which also gives the partitioned lane TIME TRAVEL within the
-    *    retention window — the capability the in-place lane gave up.
-    *
-    * Replay contracts (fixed landing_date; trip_id-keyed replacement)
-    * carry over from [[chainedTripsPartitionedCycle]] unchanged.
-    *
-    * Ported onto [[graft.io.LakeTable.SnapshotStage]]: each stage
-    * publishes through the facade (which drops emptied months' pins
-    * and maintains any spec-pinned sidecars), later stages read the
-    * mixed view through `stage.read`, and `stage.commit()` is the one
-    * atomic flip — the hand-rolled per-root pin algebra is gone while
-    * SnapshotLaneSpec's crash-window pins hold unchanged.
-    *
-    * RETRACTION PROBE: when the manifest pins a `submission_id` bloom
-    * sidecar for the survey state (q424's fixture; maintained per
-    * publish by the stage), the resubmission prior-row lookup reads
-    * only the files whose filter may hold a delta id instead of every
-    * file of the touched months — the batched point-lookup path
-    * (one sidecar pass) applied to maintenance. Falls back to the
-    * full touched-month read when no sidecar is pinned or the delta's
-    * id batch exceeds the planning cap.
-    *
-    * @param gen this cycle's generation == its manifest tag (strictly
-    *            newer than the published manifest, or the commit fails)
-    * @return (district, month, n_rows, sum_cents, n_matched, dur_sec)
-    */
-  def chainedTripsSnapshotCycle(spark: SparkSession, dir: String,
-                                manifestPrefix: String,
-                                surveyStatePrefix: String,
-                                tripsStatePrefix: String,
-                                mergedPrefix: String,
-                                surveyRawPrefix: String,
-                                tripsRawPrefix: String, lw: DataFrame,
-                                gen: String): DataFrame = {
-    import graft.ext.Exec.checkpointEager
-    val keys = Seq("imei", "landing_date")
-    val keyCols = keys.map(col)
-    def exportOf(merged: DataFrame): DataFrame = merged
-      .filter(col("submission_id").isNotNull)
-      .groupBy(col("district"), col("month"))
-      .agg(sum(col("n")).as("n_rows"),
-        sum(col("sum_cents")).as("sum_cents"),
-        count(col("trip_id")).as("n_matched"),
-        coalesce(sum(when(col("trip_id").isNotNull, col("duration_sec"))),
-          lit(0L)).as("dur_sec"))
-    // exact-replay short-circuit (the manifest-cycle contract)
-    if (Versioned.latestManifest(dir, manifestPrefix).exists(_._1 == gen))
-      return exportOf(Versioned.readSnapshotPartitions(spark, dir,
-        manifestPrefix, mergedPrefix, "lmonth", None).drop("lmonth"))
-    val stage = graft.io.LakeTable.stage(spark, dir, manifestPrefix, gen)
-    val sDelta = Versioned.readLatest(spark, dir, surveyRawPrefix)
-    val tDelta = Versioned.readLatest(spark, dir, tripsRawPrefix)
-    val contrib = submissionContrib(
-      surveyProcess(sDelta, lw, Seq("district", "month") ++ keys), keys)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val goneIds = sDelta.select(col("submission_id")).distinct()
-      val sMonths = sDelta.select(col("month")).distinct()
-        .collect().map(_.get(0)).toSeq
-      val sPriorTouched = stage.read(surveyStatePrefix, "month",
-        Some(sMonths))
-      val retractedKeys = checkpointEager(
-        retractionPriorRows(spark, dir, stage, surveyStatePrefix,
-            sMonths, goneIds, sPriorTouched)
-          .join(goneIds, Seq("submission_id"), "left_semi")
-          .select(keyCols: _*).distinct())
-      // new generations write into fresh (month, gen) leaves — the
-      // checkpoints here only avoid recomputing each frame for its
-      // present-set collect + write pair, not a self-overwrite guard
-      stage.publish(surveyStatePrefix, "month",
-        checkpointEager(sPriorTouched
-          .join(goneIds, Seq("submission_id"), "left_anti")
-          .unionByName(contrib)),
-        touched = sMonths)
-      val tMonths = tDelta.select(trunc(col("landing_date"), "month")
-          .as("lmonth")).distinct().collect().map(_.get(0)).toSeq
-      stage.publish(tripsStatePrefix, "lmonth",
-        checkpointEager(stage.read(tripsStatePrefix, "lmonth",
-            Some(tMonths))
-          .join(tDelta.select(col("trip_id")), Seq("trip_id"), "left_anti")
-          .unionByName(tDelta.withColumn("lmonth",
-            trunc(col("landing_date"), "month")))),
-        touched = tMonths)
-      val touched = checkpointEager(contrib.select(keyCols: _*)
-        .unionByName(retractedKeys)
-        .unionByName(tDelta.select(keyCols: _*)).distinct())
-      val kMonths = touched.select(trunc(col("landing_date"), "month")
-          .as("lmonth")).distinct().collect().map(_.get(0)).toSeq
-      // stage 3 reads the MIXED view: this cycle's own generations for
-      // the months it touched, the prior pins for the rest — none of
-      // it visible to manifest readers yet
-      val sSide = stage.read(surveyStatePrefix, "month", Some(kMonths))
-        .join(touched, keys, "left_semi")
-      val tSide = stage.read(tripsStatePrefix, "lmonth", Some(kMonths))
-        .drop("lmonth")
-        .join(touched, keys, "left_semi")
-      val remerged = graft.ops.GatedMerge.gatedOneToOne(sSide, tSide, keys)
-      // the merged root is not staged yet, so this IS the prior view
-      val mPriorTouched = stage.read(mergedPrefix, "lmonth", Some(kMonths))
-      val mCols = mPriorTouched.columns.filterNot(_ == "lmonth").toSeq
-      stage.publish(mergedPrefix, "lmonth",
-        checkpointEager(mPriorTouched.drop("lmonth")
-          .join(touched, keys, "left_anti")
-          .unionByName(remerged.select(mCols.map(col): _*))
-          .withColumn("lmonth", trunc(col("landing_date"), "month"))),
-        touched = kMonths)
-    } finally contrib.unpersist(blocking = false)
-    // the commit point: all three roots' pins flip atomically
-    stage.commit()
-    exportOf(Versioned.readSnapshotPartitions(spark, dir, manifestPrefix,
-      mergedPrefix, "lmonth", None)
-      .drop("lmonth"))
-  }
+  private def remergeTouched(prior: DataFrame, left: DataFrame,
+                             right: DataFrame, touched: DataFrame,
+                             keys: Seq[String]): DataFrame =
+    prior.join(touched, keys, "left_anti").unionByName(
+      graft.ops.GatedMerge.gatedOneToOne(
+        left.join(touched, keys, "left_semi"),
+        right.join(touched, keys, "left_semi"), keys)
+        .select(prior.columns.map(col): _*))
 
   /** The prior-row lookup of a resubmission batch — the retraction
     * read: survey-state rows (restricted to the delta's months) whose
@@ -1244,265 +1091,6 @@ object Incremental {
         }
       case _ => full
     }
-
-  /** The FULL COMPOSITION of the round's state lanes — the 100 TB shape
-    * of the whole pipeline: [[chainedTopologyExportCycle]]'s taxon-grain
-    * topology with derived export products AND takedown, published over
-    * [[chainedTripsPartitionedCycle]]'s month-partitioned roots with
-    * dynamic-partition-overwrite of only the touched months.
-    *
-    * One extra contract appears at the composition point: a TAKEDOWN
-    * batch must name the month its target lives in (tombstones are
-    * `(submission_id, month)` rows — a real takedown request addresses
-    * a record, and its reporting month rides along; a pipeline whose
-    * requests carry only ids resolves the month through a narrow
-    * id→month directory table first). Resubmission retraction months
-    * still come from the delta itself, as in the partitioned trips
-    * cycle. Everything else composes mechanically: touched months =
-    * delta months ∪ tombstone months; the re-merge reads only the
-    * touched keys' months (partition-pruned) and rolls taxon rows up to
-    * submission grain for the 1:1 gate; the composition + JSON doc
-    * derive from the full taxon state (export semantics — a read, not a
-    * rewrite), the monthly rollup from the published merge.
-    *
-    * CONTRACT — replays keep `landing_date` fixed: the trip_id-keyed
-    * replacement that makes the in-place publish idempotent prunes to
-    * the delta's own `lmonth` partitions, so a replayed trip whose
-    * landing day changed would orphan its stale row in the old month
-    * (see [[chainedTripsPartitionedCycle]] — the same id→month
-    * directory escape hatch applies).
-    *
-    * @param tombPrefix versioned object of `(submission_id, month)`
-    *                   takedown rows; pass a prefix whose newest object
-    *                   is EMPTY for a plain nightly run
-    * @return (district, month, rnk, taxon, cents, pct_milli, doc,
-    *         n_rows, sum_cents, n_matched, dur_sec)
-    */
-  def chainedTopologyPartitionedCycle(spark: SparkSession, dir: String,
-                                      surveyStatePrefix: String,
-                                      tripsStatePrefix: String,
-                                      mergedPrefix: String,
-                                      surveyRawPrefix: String,
-                                      tripsRawPrefix: String,
-                                      tombPrefix: String, lw: DataFrame,
-                                      topN: Int): DataFrame = {
-    import graft.ext.Exec.checkpointEager
-    val keys = Seq("imei", "landing_date")
-    val keyCols = keys.map(col)
-    val sDelta = Versioned.readLatest(spark, dir, surveyRawPrefix)
-    val tDelta = Versioned.readLatest(spark, dir, tripsRawPrefix)
-    val tomb = Versioned.readLatest(spark, dir, tombPrefix)
-    val tombIds = tomb.select(col("submission_id")).distinct()
-    val contrib = submissionContrib(
-      surveyProcess(sDelta, lw, Seq("district", "month") ++ keys),
-      keys :+ "catch_taxon")
-      .join(tombIds, Seq("submission_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val monthly = try {
-      val goneIds = sDelta.select(col("submission_id")).distinct()
-        .unionByName(tombIds).distinct()
-      // touched survey months: the delta's own (resubmission contract)
-      // plus the months the takedown batch names
-      val sMonths = sDelta.select(col("month"))
-        .unionByName(tomb.select(col("month"))).distinct()
-        .collect().map(_.get(0)).toSeq
-      val sPriorTouched = Versioned.readPartitions(spark, dir,
-        surveyStatePrefix, "month", sMonths)
-      val retractedKeys = checkpointEager(
-        sPriorTouched.join(goneIds, Seq("submission_id"), "left_semi")
-          .select(keyCols: _*).distinct())
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(sPriorTouched
-          .join(goneIds, Seq("submission_id"), "left_anti")
-          .unionByName(contrib)),
-        dir, surveyStatePrefix, "month", sMonths)
-      // trip_id-keyed replacement: idempotent under re-application
-      // (see chainedTripsPartitionedCycle)
-      val tMonths = tDelta.select(trunc(col("landing_date"), "month")
-          .as("lmonth")).distinct().collect().map(_.get(0)).toSeq
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(Versioned.readPartitions(spark, dir,
-            tripsStatePrefix, "lmonth", tMonths)
-          .join(tDelta.select(col("trip_id")), Seq("trip_id"), "left_anti")
-          .unionByName(tDelta.withColumn("lmonth",
-            trunc(col("landing_date"), "month")))),
-        dir, tripsStatePrefix, "lmonth", tMonths)
-      val touched = checkpointEager(contrib.select(keyCols: _*)
-        .unionByName(retractedKeys)
-        .unionByName(tDelta.select(keyCols: _*)).distinct())
-      val kMonths = touched.select(trunc(col("landing_date"), "month")
-          .as("lmonth")).distinct().collect().map(_.get(0)).toSeq
-      // taxon rows roll up to submission grain for the 1:1 gate
-      val sub = Versioned.readPartitions(spark, dir, surveyStatePrefix,
-          "month", kMonths)
-        .join(touched, keys, "left_semi")
-        .groupBy(col("submission_id") +: col("district") +: col("month") +:
-          keyCols: _*)
-        .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents"))
-      val tSide = Versioned.readPartitions(spark, dir, tripsStatePrefix,
-          "lmonth", kMonths)
-        .drop("lmonth")
-        .join(touched, keys, "left_semi")
-      val remerged = graft.ops.GatedMerge.gatedOneToOne(sub, tSide, keys)
-      val mPriorTouched = Versioned.readPartitions(spark, dir, mergedPrefix,
-        "lmonth", kMonths)
-      val mCols = mPriorTouched.columns.filterNot(_ == "lmonth").toSeq
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(mPriorTouched.drop("lmonth")
-          .join(touched, keys, "left_anti")
-          .unionByName(remerged.select(mCols.map(col): _*))
-          .withColumn("lmonth", trunc(col("landing_date"), "month"))),
-        dir, mergedPrefix, "lmonth", kMonths)
-      Versioned.readPartitioned(spark, dir, mergedPrefix)
-        .filter(col("submission_id").isNotNull)
-        .groupBy(col("district"), col("month"))
-        .agg(sum(col("n")).as("n_rows"),
-          sum(col("sum_cents")).as("sum_cents"),
-          count(col("trip_id")).as("n_matched"),
-          coalesce(sum(when(col("trip_id").isNotNull, col("duration_sec"))),
-            lit(0L)).as("dur_sec"))
-    } finally contrib.unpersist(blocking = false)
-    derivedExportProducts(
-      Versioned.readPartitioned(spark, dir, surveyStatePrefix), topN)
-      .join(monthly, Seq("district", "month"))
-  }
-
-  /** [[chainedTopologyPartitionedCycle]] with an O(touched) EXPORT — the
-    * last O(|state|) stage in the nightly topology removed. The
-    * partitioned cycle made every WRITE O(touched months), but its
-    * export still re-read the full published state per run to recompute
-    * a rollup and a composition whose untouched months cannot have
-    * changed: the monthly rollup is within-month by construction, and
-    * the top-N+"Other" composition ranks and shares WITHIN one
-    * (district, month) — per-month independence is exact. So the
-    * derived products become partitioned state themselves:
-    *
-    *  - `rollupPrefix` (month-partitioned): the trip-enriched monthly
-    *    export rows. A cycle re-derives ONLY the merge-touched months
-    *    (`kMonths`) from the freshly published merge — a
-    *    partition-pruned read — and dynamic-overwrites those months; a
-    *    month whose survey rows all vanished erases.
-    *  - `compPrefix` (month-partitioned): the composition + JSON doc
-    *    rows. A cycle re-derives ONLY the survey-touched months
-    *    (`sMonths` = delta months ∪ tombstone months) from the taxon
-    *    state — partition-pruned — and dynamic-overwrites those.
-    *
-    * The returned frame is the FULL export read back from the two
-    * roots (the q399 oracle is the same full-reprocess-through-
-    * composition as q394's), but the cycle's reads and writes are both
-    * O(touched): TouchedExportSpec certifies the input-bytes drop
-    * against the full-export twin on the same fixture and pins
-    * untouched months of both export roots byte-identical.
-    *
-    * Both replay contracts of the partitioned lane carry over
-    * unchanged (fixed landing_date; trip_id-keyed replacement).
-    *
-    * @return (district, month, rnk, taxon, cents, pct_milli, doc,
-    *         n_rows, sum_cents, n_matched, dur_sec)
-    */
-  def chainedTopologyTouchedExportCycle(spark: SparkSession, dir: String,
-                                        surveyStatePrefix: String,
-                                        tripsStatePrefix: String,
-                                        mergedPrefix: String,
-                                        rollupPrefix: String,
-                                        compPrefix: String,
-                                        surveyRawPrefix: String,
-                                        tripsRawPrefix: String,
-                                        tombPrefix: String, lw: DataFrame,
-                                        topN: Int): DataFrame = {
-    import graft.ext.Exec.checkpointEager
-    val keys = Seq("imei", "landing_date")
-    val keyCols = keys.map(col)
-    val sDelta = Versioned.readLatest(spark, dir, surveyRawPrefix)
-    val tDelta = Versioned.readLatest(spark, dir, tripsRawPrefix)
-    val tomb = Versioned.readLatest(spark, dir, tombPrefix)
-    val tombIds = tomb.select(col("submission_id")).distinct()
-    val contrib = submissionContrib(
-      surveyProcess(sDelta, lw, Seq("district", "month") ++ keys),
-      keys :+ "catch_taxon")
-      .join(tombIds, Seq("submission_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (sMonths, kMonths) = try {
-      val goneIds = sDelta.select(col("submission_id")).distinct()
-        .unionByName(tombIds).distinct()
-      val sM = sDelta.select(col("month"))
-        .unionByName(tomb.select(col("month"))).distinct()
-        .collect().map(_.get(0)).toSeq
-      val sPriorTouched = Versioned.readPartitions(spark, dir,
-        surveyStatePrefix, "month", sM)
-      val retractedKeys = checkpointEager(
-        sPriorTouched.join(goneIds, Seq("submission_id"), "left_semi")
-          .select(keyCols: _*).distinct())
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(sPriorTouched
-          .join(goneIds, Seq("submission_id"), "left_anti")
-          .unionByName(contrib)),
-        dir, surveyStatePrefix, "month", sM)
-      val tMonths = tDelta.select(trunc(col("landing_date"), "month")
-          .as("lmonth")).distinct().collect().map(_.get(0)).toSeq
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(Versioned.readPartitions(spark, dir,
-            tripsStatePrefix, "lmonth", tMonths)
-          .join(tDelta.select(col("trip_id")), Seq("trip_id"), "left_anti")
-          .unionByName(tDelta.withColumn("lmonth",
-            trunc(col("landing_date"), "month")))),
-        dir, tripsStatePrefix, "lmonth", tMonths)
-      val touched = checkpointEager(contrib.select(keyCols: _*)
-        .unionByName(retractedKeys)
-        .unionByName(tDelta.select(keyCols: _*)).distinct())
-      val kM = touched.select(trunc(col("landing_date"), "month")
-          .as("lmonth")).distinct().collect().map(_.get(0)).toSeq
-      val sub = Versioned.readPartitions(spark, dir, surveyStatePrefix,
-          "month", kM)
-        .join(touched, keys, "left_semi")
-        .groupBy(col("submission_id") +: col("district") +: col("month") +:
-          keyCols: _*)
-        .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents"))
-      val tSide = Versioned.readPartitions(spark, dir, tripsStatePrefix,
-          "lmonth", kM)
-        .drop("lmonth")
-        .join(touched, keys, "left_semi")
-      val remerged = graft.ops.GatedMerge.gatedOneToOne(sub, tSide, keys)
-      val mPriorTouched = Versioned.readPartitions(spark, dir, mergedPrefix,
-        "lmonth", kM)
-      val mCols = mPriorTouched.columns.filterNot(_ == "lmonth").toSeq
-      Versioned.overwriteTouchedPartitions(
-        checkpointEager(mPriorTouched.drop("lmonth")
-          .join(touched, keys, "left_anti")
-          .unionByName(remerged.select(mCols.map(col): _*))
-          .withColumn("lmonth", trunc(col("landing_date"), "month"))),
-        dir, mergedPrefix, "lmonth", kM)
-      (sM, kM)
-    } finally contrib.unpersist(blocking = false)
-    // stage 4a: monthly rollup for ONLY the merge-touched months — a
-    // partition-pruned read of the freshly published merge (survey rows'
-    // month == month(landing_date) == lmonth, the preprocess contract,
-    // so month m's rollup depends on partition lmonth=m alone)
-    Versioned.overwriteTouchedPartitions(
-      checkpointEager(Versioned.readPartitions(spark, dir, mergedPrefix,
-          "lmonth", kMonths)
-        .filter(col("submission_id").isNotNull)
-        .groupBy(col("district"), col("month"))
-        .agg(sum(col("n")).as("n_rows"),
-          sum(col("sum_cents")).as("sum_cents"),
-          count(col("trip_id")).as("n_matched"),
-          coalesce(sum(when(col("trip_id").isNotNull, col("duration_sec"))),
-            lit(0L)).as("dur_sec"))),
-      dir, rollupPrefix, "month", kMonths)
-    // stage 4b: composition + doc for ONLY the survey-touched months —
-    // rank, share, and doc are all within (district, month)
-    Versioned.overwriteTouchedPartitions(
-      checkpointEager(derivedExportProducts(
-        Versioned.readPartitions(spark, dir, surveyStatePrefix,
-          "month", sMonths), topN)),
-      dir, compPrefix, "month", sMonths)
-    Versioned.readPartitioned(spark, dir, compPrefix)
-      .join(Versioned.readPartitioned(spark, dir, rollupPrefix),
-        Seq("district", "month"))
-      .select(col("district"), col("month"), col("rnk"), col("taxon"),
-        col("cents"), col("pct_milli"), col("doc"), col("n_rows"),
-        col("sum_cents"), col("n_matched"), col("dur_sec"))
-  }
 
   /** Incremental gated 1:1 trip merge — the delta lane for the
     * reference's `merge_trips()` stage (`R/merge-trips.R:44-73`), the
@@ -1549,8 +1137,6 @@ object Incremental {
       leftPrefix + "_next", newTag)
     val rPath = Versioned.write(rPrior.unionByName(rDelta), dir,
       rightPrefix + "_next", newTag)
-    val lNew = spark.read.parquet(lPath)
-    val rNew = spark.read.parquet(rPath)
     val keyCols = keys.map(col)
     // checkpointed: five references in the merged-write plan (twice per
     // merge side through the count-attach self-join, once in the prior
@@ -1558,11 +1144,8 @@ object Incremental {
     val touched = graft.ext.Exec.checkpointEager(
       lDelta.select(keyCols: _*)
         .unionByName(rDelta.select(keyCols: _*)).distinct())
-    val remerged = graft.ops.GatedMerge.gatedOneToOne(
-      lNew.join(touched, keys, "left_semi"),
-      rNew.join(touched, keys, "left_semi"), keys)
-    val merged = mPrior.join(touched, keys, "left_anti")
-      .unionByName(remerged.select(mPrior.columns.map(col): _*))
+    val merged = remergeTouched(mPrior, Versioned.readObject(spark, lPath),
+      Versioned.readObject(spark, rPath), touched, keys)
     Versioned.write(merged, dir, mergedPrefix + "_next", newTag)
     merged
   }
@@ -2201,124 +1784,6 @@ object Incremental {
     comp.join(doc, Seq("district", "month"))
       .select(col("district"), col("month"), col("rnk"), col("taxon"),
         col("cents"), col("pct_milli"), col("doc"))
-  }
-
-  /** The COMPLETE topology with the FULL derived export — the last
-    * export-parity gap in delta mode closed: [[chainedTripsCycle]]'s
-    * four stages (submission retraction → state fold → gated trip
-    * merge → export) now also ship the reference's derived dashboard
-    * products (top-N + "Other" composition and the nested JSON doc,
-    * [[derivedExportProducts]]) from the same one delta-only run.
-    *
-    * The survey state therefore keeps TAXON grain — one (submission,
-    * district, month, imei, landing_date, catch_taxon) row — the
-    * minimum from which the composition re-derives without raw rows.
-    * The 1:1 trip gate however must count SUBMISSIONS per device-day,
-    * not taxa, so the merge stage first rolls the touched keys' taxon
-    * rows up to submission grain (O(touched), never O(state)) and
-    * re-merges those. Both export products and the monthly rollup then
-    * derive from the freshly published objects alone: composition + doc
-    * from the taxon state, the trip-enriched monthly export from the
-    * merge. Tombstones (the takedown variant) are authoritative over
-    * the delta, exactly as in [[chainedTakedownCycle]].
-    *
-    * @return (district, month, rnk, taxon, cents, pct_milli, doc,
-    *         n_rows, sum_cents, n_matched, dur_sec) — one row per
-    *         composition entry, the month's export rollup repeated on
-    *         each (the q391/q392 oracles replay the whole shape)
-    */
-  def chainedTopologyExportCycle(spark: SparkSession, dir: String,
-                                 surveyStatePrefix: String,
-                                 tripsStatePrefix: String,
-                                 mergedPrefix: String,
-                                 surveyRawPrefix: String,
-                                 tripsRawPrefix: String, lw: DataFrame,
-                                 topN: Int, newTag: String): DataFrame =
-    chainedTopologyExportImpl(spark, dir, surveyStatePrefix,
-      tripsStatePrefix, mergedPrefix, surveyRawPrefix, tripsRawPrefix,
-      spark.range(0).select(col("id").as("submission_id")), lw, topN,
-      newTag)
-
-  /** [[chainedTopologyExportCycle]] with a takedown batch: tombstoned
-    * submissions leave the taxon state, the gated merge (their 1:1
-    * matches un-merge to trip-only pass-throughs), the monthly export,
-    * the composition, AND the JSON doc — one cycle, no raw re-scan.
-    */
-  def chainedTopologyTakedownCycle(spark: SparkSession, dir: String,
-                                   surveyStatePrefix: String,
-                                   tripsStatePrefix: String,
-                                   mergedPrefix: String,
-                                   surveyRawPrefix: String,
-                                   tripsRawPrefix: String,
-                                   tombPrefix: String, lw: DataFrame,
-                                   topN: Int, newTag: String): DataFrame =
-    chainedTopologyExportImpl(spark, dir, surveyStatePrefix,
-      tripsStatePrefix, mergedPrefix, surveyRawPrefix, tripsRawPrefix,
-      Versioned.readLatest(spark, dir, tombPrefix)
-        .select(col("submission_id")).distinct(),
-      lw, topN, newTag)
-
-  private def chainedTopologyExportImpl(spark: SparkSession, dir: String,
-                                        surveyStatePrefix: String,
-                                        tripsStatePrefix: String,
-                                        mergedPrefix: String,
-                                        surveyRawPrefix: String,
-                                        tripsRawPrefix: String,
-                                        tombIds: DataFrame, lw: DataFrame,
-                                        topN: Int,
-                                        newTag: String): DataFrame = {
-    val keys = Seq("imei", "landing_date")
-    val keyCols = keys.map(col)
-    val sState = Versioned.readLatest(spark, dir, surveyStatePrefix)
-    val tState = Versioned.readLatest(spark, dir, tripsStatePrefix)
-    val mPrior = Versioned.readLatest(spark, dir, mergedPrefix)
-    val sDelta = Versioned.readLatest(spark, dir, surveyRawPrefix)
-    val tDelta = Versioned.readLatest(spark, dir, tripsRawPrefix)
-    val contrib = submissionContrib(
-      surveyProcess(sDelta, lw, Seq("district", "month") ++ keys),
-      keys :+ "catch_taxon")
-      .join(tombIds, Seq("submission_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (sPath, mPath) = try {
-      val goneIds = sDelta.select(col("submission_id")).distinct()
-        .unionByName(tombIds).distinct()
-      val retracted = sState.join(goneIds, Seq("submission_id"), "left_semi")
-      val sp = Versioned.write(
-        sState.join(goneIds, Seq("submission_id"), "left_anti")
-          .unionByName(contrib),
-        dir, surveyStatePrefix + "_next", newTag)
-      val tp = Versioned.write(tState.unionByName(tDelta), dir,
-        tripsStatePrefix + "_next", newTag)
-      // checkpointed like [[chainedTripsImpl]]'s: the merged-write plan
-      // references it five times (and two of those through the taxon→
-      // submission rollup below, multiplying that groupBy as well)
-      val touched = graft.ext.Exec.checkpointEager(
-        contrib.select(keyCols: _*)
-          .unionByName(retracted.select(keyCols: _*))
-          .unionByName(tDelta.select(keyCols: _*)).distinct())
-      // the gate counts SUBMISSIONS per device-day: roll the touched
-      // keys' taxon rows up to submission grain before re-merging
-      val sub = spark.read.parquet(sp).join(touched, keys, "left_semi")
-        .groupBy(col("submission_id") +: col("district") +: col("month") +:
-          keyCols: _*)
-        .agg(sum(col("n")).as("n"), sum(col("sum_cents")).as("sum_cents"))
-      val remerged = graft.ops.GatedMerge.gatedOneToOne(sub,
-        spark.read.parquet(tp).join(touched, keys, "left_semi"), keys)
-      val mp = Versioned.write(mPrior.join(touched, keys, "left_anti")
-          .unionByName(remerged.select(mPrior.columns.map(col): _*)),
-        dir, mergedPrefix + "_next", newTag)
-      (sp, mp)
-    } finally contrib.unpersist(blocking = false)
-    val monthly = spark.read.parquet(mPath)
-      .filter(col("submission_id").isNotNull)
-      .groupBy(col("district"), col("month"))
-      .agg(sum(col("n")).as("n_rows"),
-        sum(col("sum_cents")).as("sum_cents"),
-        count(col("trip_id")).as("n_matched"),
-        coalesce(sum(when(col("trip_id").isNotNull, col("duration_sec"))),
-          lit(0L)).as("dur_sec"))
-    derivedExportProducts(spark.read.parquet(sPath), topN)
-      .join(monthly, Seq("district", "month"))
   }
 
   /** Tombstone DELETION lane for the dedup state — the third state

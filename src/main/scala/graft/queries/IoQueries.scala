@@ -6,7 +6,8 @@ import graft.core.{Exact, Tables}
 import graft.core.Exact.{moneySum, r4}
 import graft.io.{JsonIngest, Versioned}
 import graft.ops.Reshape
-import graft.pipeline.SpeciesReshape
+import graft.pipeline.{Incremental, SpeciesReshape}
+import graft.pipeline.Incremental.TopologyExport
 
 /** Source/sink operators (SURVEY.md §2.1) plus remaining inventory rows:
   * nested JSON ingest with outer repeat-group expansion (S1/S2), GeoJSON
@@ -1129,77 +1130,27 @@ object IoQueries extends QueryPack {
              |ORDER BY user_id, day, p_event NULLS FIRST, e_event NULLS FIRST""".stripMargin)),
 
     // THE COMPLETE reference topology, delta-only: raw → preprocess →
-    // validate → MERGE_TRIPS → export in one chained cycle. The survey
-    // delta carries new submissions PLUS resubmission edits (q378's
-    // validator workflow); the trips delta lands half the GPS trips
-    // late, onto device-days whose surveys are already published — so
-    // submission-grain retraction, the gated-merge un-merge/fuse flips,
-    // and the state-only export all fire in ONE run. Oracle = the FULL
+    // validate → MERGE_TRIPS → export in one chained cycle over the
+    // object-versioned lane. The survey delta carries new submissions
+    // PLUS resubmission edits (q378's validator workflow); the trips
+    // delta lands a slice of the GPS trips late plus seeded second trips
+    // onto already-published device-days — so submission-grain
+    // retraction, the gated-merge un-merge/fuse flips, and the
+    // state-only export all fire in ONE run. Oracle = the FULL
     // four-stage reprocess (preprocess+validate CTEs → per-submission
     // contributions → window-count gated 1:1 merge → survey-centric
     // monthly export).
     Q("q387_chained_trips",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q387_trips")
-        val lw = chainLwTable(s)
-        // persisted: six fixture/cycle actions consume this projection;
-        // unpersisted each would re-run the lineitem ⋈ orders scan
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        val cutoff = to_date(lit("1998-06-15"))
-        val prior = flat.filter($"day" < cutoff)
-        val edited = prior.filter($"submission_id" % 23 === 0)
-          .withColumn("sg", $"sg".withField("length_bins",
-            transform($"sg.length_bins", b => struct(
-              b.getField("length_class").as("length_class"),
-              greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        // seeded late SECOND trips for existing device-days (every 51st
-        // trip re-keys as trip_id+1, same imei + landing_date): these
-        // arrive only in the delta, so a published 1:1 match for that
-        // device-day must UN-MERGE — the retraction direction a random
-        // nightly slice would hit only by luck
-        val dupTrips = trips.filter($"trip_id" % 51 === 0)
-          .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
-            (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
-        // persisted: the prior contribution state feeds TWO write
-        // actions (its own object + the prior published merge) — an
-        // unpersisted chain would run the full reshape+flags walk twice
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // nightly-sized trips delta: a tenth of the trips plus the
-        // seeded duplicates — the touched-key set (and so the re-merge)
-        // stays O(delta), not O(history)
-        val tPrior = trips.filter($"trip_id" % 30 =!= 0)
-        Versioned.write(sPrior, dir, "trg_sstate", "00000001_aaa")
-        Versioned.write(tPrior, dir, "trg_tstate", "00000001_aaa")
-        Versioned.write(
-          graft.ops.GatedMerge.gatedOneToOne(sPrior, tPrior, keys),
-          dir, "trg_merged", "00000001_aaa")
-        Versioned.write(
-          nest(flat.filter($"day" >= cutoff).unionByName(edited))
-            .coalesce(4),
-          dir, "trg_sraw", "00000002_bbb")
-        Versioned.write(
-          trips.filter($"trip_id" % 30 === 0).unionByName(dupTrips), dir,
-          "trg_traw", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTripsCycle(s, dir, "trg_sstate",
-            "trg_tstate", "trg_merged", "trg_sraw", "trg_traw", lw,
-            "00000002_bbb")
-          .orderBy($"district", $"month")
+        val f = topologyFixture(s, d, "1998-06-15", tripCut = None,
+          edits = true, tomb = None, taxon = false)
+        f.writeObjects(dir, "trg", manifest = false)
+        f.writeDeltas(dir, "trg")
+        Incremental.topologyCycle(s, dir, Incremental.objectLane(s, dir, Gen2),
+            "trg_sstate", "trg_tstate", "trg_merged", "trg_sraw", "trg_traw",
+            None, f.lw, TopologyExport.Monthly)
+          .orderBy(col("district"), col("month"))
       },
       Some(tripsChainOracleSql)),
 
@@ -1213,61 +1164,16 @@ object IoQueries extends QueryPack {
     // four-stage reprocess as q387's.
     Q("q400_manifest_topology",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q400_manifest")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        // fixture hygiene: a bench rep re-initializes this scratch dir,
-        // and the FRESH tag-1 manifest would read as stale next to the
-        // previous rep's tag-2 — drop prior manifest generations first
-        Option(new java.io.File(dir).listFiles()).foreach(_.toSeq
-          .filter(_.getName.startsWith("man_root__")).foreach(_.delete()))
-        val cutoff = to_date(lit("1998-06-15"))
-        val prior = flat.filter($"day" < cutoff)
-        val edited = prior.filter($"submission_id" % 23 === 0)
-          .withColumn("sg", $"sg".withField("length_bins",
-            transform($"sg.length_bins", b => struct(
-              b.getField("length_class").as("length_class"),
-              greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val dupTrips = trips.filter($"trip_id" % 51 === 0)
-          .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
-            (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tPrior = trips.filter($"trip_id" % 30 =!= 0)
-        Versioned.write(sPrior, dir, "man_sstate", "00000001_aaa")
-        Versioned.write(tPrior, dir, "man_tstate", "00000001_aaa")
-        Versioned.write(
-          graft.ops.GatedMerge.gatedOneToOne(sPrior, tPrior, keys),
-          dir, "man_merged", "00000001_aaa")
-        Versioned.commitManifest(dir, "man_root", "00000001_aaa", Map(
-          "man_sstate" -> "00000001_aaa", "man_tstate" -> "00000001_aaa",
-          "man_merged" -> "00000001_aaa"))
-        Versioned.write(
-          nest(flat.filter($"day" >= cutoff).unionByName(edited))
-            .coalesce(4),
-          dir, "man_sraw", "00000002_bbb")
-        Versioned.write(
-          trips.filter($"trip_id" % 30 === 0).unionByName(dupTrips), dir,
-          "man_traw", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTripsManifestCycle(s, dir,
-            "man_root", "man_sstate", "man_tstate", "man_merged",
-            "man_sraw", "man_traw", lw, "00000002_bbb")
-          .orderBy($"district", $"month")
+        val f = topologyFixture(s, d, "1998-06-15", tripCut = None,
+          edits = true, tomb = None, taxon = false)
+        f.writeObjects(dir, "man", manifest = true)
+        f.writeDeltas(dir, "man")
+        Incremental.topologyCycle(s, dir,
+            Incremental.manifestLane(s, dir, "man_root", Gen2),
+            "man_sstate", "man_tstate", "man_merged", "man_sraw", "man_traw",
+            None, f.lw, TopologyExport.Monthly)
+          .orderBy(col("district"), col("month"))
       },
       Some(tripsChainOracleSql)),
 
@@ -1356,47 +1262,15 @@ object IoQueries extends QueryPack {
     // tombstoned submissions excluded (full-reprocess-minus-deleted).
     Q("q389_chained_takedown",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q389_takedown")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        val cutoff = to_date(lit("1998-06-15"))
-        val prior = flat.filter($"day" < cutoff)
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tPrior = trips.filter($"trip_id" % 30 =!= 0)
-        Versioned.write(sPrior, dir, "tkd_sstate", "00000001_aaa")
-        Versioned.write(tPrior, dir, "tkd_tstate", "00000001_aaa")
-        Versioned.write(
-          graft.ops.GatedMerge.gatedOneToOne(sPrior, tPrior, keys),
-          dir, "tkd_merged", "00000001_aaa")
-        Versioned.write(nest(flat.filter($"day" >= cutoff)).coalesce(4),
-          dir, "tkd_sraw", "00000002_bbb")
-        Versioned.write(trips.filter($"trip_id" % 30 === 0), dir,
-          "tkd_traw", "00000002_bbb")
-        // the takedown batch: every 31st PRIOR submission
-        Versioned.write(
-          prior.filter($"submission_id" % 31 === 0)
-            .select($"submission_id").distinct(),
-          dir, "tkd_tomb", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTakedownCycle(s, dir,
-            "tkd_sstate", "tkd_tstate", "tkd_merged", "tkd_sraw",
-            "tkd_traw", "tkd_tomb", lw, "00000002_bbb")
-          .orderBy($"district", $"month")
+        val f = topologyFixture(s, d, "1998-06-15", tripCut = None,
+          edits = false, tomb = Some(lit(true)), taxon = false)
+        f.writeObjects(dir, "tkd", manifest = false)
+        f.writeDeltas(dir, "tkd")
+        Incremental.topologyCycle(s, dir, Incremental.objectLane(s, dir, Gen2),
+            "tkd_sstate", "tkd_tstate", "tkd_merged", "tkd_sraw", "tkd_traw",
+            Some("tkd_tomb"), f.lw, TopologyExport.Monthly)
+          .orderBy(col("district"), col("month"))
       },
       Some(takedownOracleSql)),
 
@@ -1415,60 +1289,15 @@ object IoQueries extends QueryPack {
     // same FULL four-stage reprocess as q387's, with the windowed edit.
     Q("q390_partitioned_topology",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q390_ptrips")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        val cutoff = to_date(lit("2001-06-01"))
-        val tripCut = to_date(lit("2001-01-01"))
-        val prior = flat.filter($"day" < cutoff)
-        val edited = prior
-          .filter($"submission_id" % 23 === 0 && $"day" >= tripCut)
-          .withColumn("sg", $"sg".withField("length_bins",
-            transform($"sg.length_bins", b => struct(
-              b.getField("length_class").as("length_class"),
-              greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val dupTrips = trips
-          .filter($"trip_id" % 51 === 0 && $"landing_date" >= tripCut)
-          .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
-            (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tPrior = trips.filter($"landing_date" < tripCut)
-        val lm = trunc($"landing_date", "month").as("lmonth")
-        Versioned.writePartitionedFull(sPrior, dir, "ptr_sstate",
-          Seq("month"))
-        Versioned.writePartitionedFull(tPrior.withColumn("lmonth", lm),
-          dir, "ptr_tstate", Seq("lmonth"))
-        Versioned.writePartitionedFull(
-          graft.ops.GatedMerge.gatedOneToOne(sPrior, tPrior, keys)
-            .withColumn("lmonth", lm),
-          dir, "ptr_merged", Seq("lmonth"))
-        Versioned.write(
-          nest(flat.filter($"day" >= cutoff).unionByName(edited))
-            .coalesce(4),
-          dir, "ptr_sraw", "00000002_bbb")
-        Versioned.write(
-          trips.filter($"landing_date" >= tripCut).unionByName(dupTrips),
-          dir, "ptr_traw", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTripsPartitionedCycle(s, dir,
-            "ptr_sstate", "ptr_tstate", "ptr_merged", "ptr_sraw",
-            "ptr_traw", lw)
-          .orderBy($"district", $"month")
+        val f = topologyFixture(s, d, "2001-06-01", Some("2001-01-01"),
+          edits = true, tomb = None, taxon = false)
+        f.writePartitioned(dir, "ptr")
+        f.writeDeltas(dir, "ptr")
+        Incremental.topologyCycle(s, dir, Incremental.inPlaceLane(s, dir),
+            "ptr_sstate", "ptr_tstate", "ptr_merged", "ptr_sraw", "ptr_traw",
+            None, f.lw, TopologyExport.Monthly)
+          .orderBy(col("district"), col("month"))
       },
       Some(partitionedTripsOracleSql)),
 
@@ -1482,56 +1311,15 @@ object IoQueries extends QueryPack {
     // Oracle = the full four-stage reprocess THROUGH the composition.
     Q("q391_topology_export",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q391_txe")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        val cutoff = to_date(lit("1998-06-15"))
-        val prior = flat.filter($"day" < cutoff)
-        val edited = prior.filter($"submission_id" % 23 === 0)
-          .withColumn("sg", $"sg".withField("length_bins",
-            transform($"sg.length_bins", b => struct(
-              b.getField("length_class").as("length_class"),
-              greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val dupTrips = trips.filter($"trip_id" % 51 === 0)
-          .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
-            (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys :+ "catch_taxon")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val subPrior = sPrior.groupBy($"submission_id", $"district",
-            $"month", $"imei", $"landing_date")
-          .agg(sum($"n").as("n"), sum($"sum_cents").as("sum_cents"))
-        val tPrior = trips.filter($"trip_id" % 30 =!= 0)
-        Versioned.write(sPrior, dir, "txe_sstate", "00000001_aaa")
-        Versioned.write(tPrior, dir, "txe_tstate", "00000001_aaa")
-        Versioned.write(
-          graft.ops.GatedMerge.gatedOneToOne(subPrior, tPrior, keys),
-          dir, "txe_merged", "00000001_aaa")
-        Versioned.write(
-          nest(flat.filter($"day" >= cutoff).unionByName(edited))
-            .coalesce(4),
-          dir, "txe_sraw", "00000002_bbb")
-        Versioned.write(
-          trips.filter($"trip_id" % 30 === 0).unionByName(dupTrips), dir,
-          "txe_traw", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTopologyExportCycle(s, dir,
-            "txe_sstate", "txe_tstate", "txe_merged", "txe_sraw",
-            "txe_traw", lw, topN = 3, "00000002_bbb")
-          .orderBy($"district", $"month", $"rnk")
+        val f = topologyFixture(s, d, "1998-06-15", tripCut = None,
+          edits = true, tomb = None, taxon = true)
+        f.writeObjects(dir, "txe", manifest = false)
+        f.writeDeltas(dir, "txe")
+        Incremental.topologyCycle(s, dir, Incremental.objectLane(s, dir, Gen2),
+            "txe_sstate", "txe_tstate", "txe_merged", "txe_sraw", "txe_traw",
+            None, f.lw, TopologyExport.Products(topN = 3))
+          .orderBy(col("district"), col("month"), col("rnk"))
       },
       Some(topologyExportOracleSql(EditedBinNSql, contribWhere = "",
         includeDupTrips = true))),
@@ -1544,49 +1332,15 @@ object IoQueries extends QueryPack {
     // composition.
     Q("q392_topology_export_takedown",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q392_txetkd")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        val cutoff = to_date(lit("1998-06-15"))
-        val prior = flat.filter($"day" < cutoff)
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys :+ "catch_taxon")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val subPrior = sPrior.groupBy($"submission_id", $"district",
-            $"month", $"imei", $"landing_date")
-          .agg(sum($"n").as("n"), sum($"sum_cents").as("sum_cents"))
-        val tPrior = trips.filter($"trip_id" % 30 =!= 0)
-        Versioned.write(sPrior, dir, "txd_sstate", "00000001_aaa")
-        Versioned.write(tPrior, dir, "txd_tstate", "00000001_aaa")
-        Versioned.write(
-          graft.ops.GatedMerge.gatedOneToOne(subPrior, tPrior, keys),
-          dir, "txd_merged", "00000001_aaa")
-        Versioned.write(nest(flat.filter($"day" >= cutoff)).coalesce(4),
-          dir, "txd_sraw", "00000002_bbb")
-        Versioned.write(trips.filter($"trip_id" % 30 === 0), dir,
-          "txd_traw", "00000002_bbb")
-        Versioned.write(
-          prior.filter($"submission_id" % 31 === 0)
-            .select($"submission_id").distinct(),
-          dir, "txd_tomb", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTopologyTakedownCycle(s, dir,
-            "txd_sstate", "txd_tstate", "txd_merged", "txd_sraw",
-            "txd_traw", "txd_tomb", lw, topN = 3, "00000002_bbb")
-          .orderBy($"district", $"month", $"rnk")
+        val f = topologyFixture(s, d, "1998-06-15", tripCut = None,
+          edits = false, tomb = Some(lit(true)), taxon = true)
+        f.writeObjects(dir, "txd", manifest = false)
+        f.writeDeltas(dir, "txd")
+        Incremental.topologyCycle(s, dir, Incremental.objectLane(s, dir, Gen2),
+            "txd_sstate", "txd_tstate", "txd_merged", "txd_sraw", "txd_traw",
+            Some("txd_tomb"), f.lw, TopologyExport.Products(topN = 3))
+          .orderBy(col("district"), col("month"), col("rnk"))
       },
       Some(topologyExportOracleSql(RawBinNSql,
         contribWhere = "  WHERE NOT (submission_id % 31 = 0" +
@@ -1604,68 +1358,16 @@ object IoQueries extends QueryPack {
     // composition, minus the deleted, with the windowed edit.
     Q("q394_partitioned_export_takedown",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q394_pxt")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        val cutoff = to_date(lit("2001-06-01"))
-        val tripCut = to_date(lit("2001-01-01"))
-        val tombCut = to_date(lit("2000-06-01"))
-        val prior = flat.filter($"day" < cutoff)
-        val edited = prior
-          .filter($"submission_id" % 23 === 0 && $"day" >= tripCut)
-          .withColumn("sg", $"sg".withField("length_bins",
-            transform($"sg.length_bins", b => struct(
-              b.getField("length_class").as("length_class"),
-              greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val dupTrips = trips
-          .filter($"trip_id" % 51 === 0 && $"landing_date" >= tripCut)
-          .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
-            (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys :+ "catch_taxon")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val subPrior = sPrior.groupBy($"submission_id", $"district",
-            $"month", $"imei", $"landing_date")
-          .agg(sum($"n").as("n"), sum($"sum_cents").as("sum_cents"))
-        val tPrior = trips.filter($"landing_date" < tripCut)
-        val lm = trunc($"landing_date", "month").as("lmonth")
-        Versioned.writePartitionedFull(sPrior, dir, "pxt_sstate",
-          Seq("month"))
-        Versioned.writePartitionedFull(tPrior.withColumn("lmonth", lm),
-          dir, "pxt_tstate", Seq("lmonth"))
-        Versioned.writePartitionedFull(
-          graft.ops.GatedMerge.gatedOneToOne(subPrior, tPrior, keys)
-            .withColumn("lmonth", lm),
-          dir, "pxt_merged", Seq("lmonth"))
-        Versioned.write(
-          nest(flat.filter($"day" >= cutoff).unionByName(edited))
-            .coalesce(4),
-          dir, "pxt_sraw", "00000002_bbb")
-        Versioned.write(
-          trips.filter($"landing_date" >= tripCut).unionByName(dupTrips),
-          dir, "pxt_traw", "00000002_bbb")
-        Versioned.write(
-          prior.filter($"submission_id" % 31 === 0 && $"day" >= tombCut)
-            .select($"submission_id", $"month").distinct(),
-          dir, "pxt_tomb", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTopologyPartitionedCycle(s, dir,
-            "pxt_sstate", "pxt_tstate", "pxt_merged", "pxt_sraw",
-            "pxt_traw", "pxt_tomb", lw, topN = 3)
-          .orderBy($"district", $"month", $"rnk")
+        val f = topologyFixture(s, d, "2001-06-01", Some("2001-01-01"),
+          edits = true, tomb = Some(col("day") >= to_date(lit("2000-06-01"))),
+          taxon = true)
+        f.writePartitioned(dir, "pxt")
+        f.writeDeltas(dir, "pxt")
+        Incremental.topologyCycle(s, dir, Incremental.inPlaceLane(s, dir),
+            "pxt_sstate", "pxt_tstate", "pxt_merged", "pxt_sraw", "pxt_traw",
+            Some("pxt_tomb"), f.lw, TopologyExport.Products(topN = 3))
+          .orderBy(col("district"), col("month"), col("rnk"))
       },
       Some(topologyExportOracleSql(WindowedEditedBinNSql,
         contribWhere = "  WHERE NOT (submission_id % 31 = 0" +
@@ -1686,70 +1388,17 @@ object IoQueries extends QueryPack {
     // same full four-stage reprocess as q390's.
     Q("q403_snapshot_topology",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q403_snap")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        // fixture hygiene: drop prior reps' manifest generations (the
-        // fresh tag-1 commit would otherwise read as stale)
-        Option(new java.io.File(dir).listFiles()).foreach(_.toSeq
-          .filter(_.getName.startsWith("snp_root__")).foreach(_.delete()))
-        val cutoff = to_date(lit("2001-06-01"))
-        val tripCut = to_date(lit("2001-01-01"))
-        val prior = flat.filter($"day" < cutoff)
-        val edited = prior
-          .filter($"submission_id" % 23 === 0 && $"day" >= tripCut)
-          .withColumn("sg", $"sg".withField("length_bins",
-            transform($"sg.length_bins", b => struct(
-              b.getField("length_class").as("length_class"),
-              greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val dupTrips = trips
-          .filter($"trip_id" % 51 === 0 && $"landing_date" >= tripCut)
-          .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
-            (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tPrior = trips.filter($"landing_date" < tripCut)
-        val lm = trunc($"landing_date", "month").as("lmonth")
-        val g1 = "00000001_aaa"
-        val sP = Versioned.writeSnapshotFull(sPrior, dir, "snp_sstate",
-          "month", g1)
-        val tP = Versioned.writeSnapshotFull(tPrior.withColumn("lmonth", lm),
-          dir, "snp_tstate", "lmonth", g1)
-        val mP = Versioned.writeSnapshotFull(
-          graft.ops.GatedMerge.gatedOneToOne(sPrior, tPrior, keys)
-            .withColumn("lmonth", lm),
-          dir, "snp_merged", "lmonth", g1)
-        Versioned.commitManifest(dir, "snp_root", g1,
-          sP.map(v => Versioned.snapshotPinKey("snp_sstate", v) -> g1)
-            .toMap ++
-          tP.map(v => Versioned.snapshotPinKey("snp_tstate", v) -> g1) ++
-          mP.map(v => Versioned.snapshotPinKey("snp_merged", v) -> g1))
-        Versioned.write(
-          nest(flat.filter($"day" >= cutoff).unionByName(edited))
-            .coalesce(4),
-          dir, "snp_sraw", "00000002_bbb")
-        Versioned.write(
-          trips.filter($"landing_date" >= tripCut).unionByName(dupTrips),
-          dir, "snp_traw", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTripsSnapshotCycle(s, dir,
-            "snp_root", "snp_sstate", "snp_tstate", "snp_merged",
-            "snp_sraw", "snp_traw", lw, gen = "00000002_bbb")
-          .orderBy($"district", $"month")
+        val f = topologyFixture(s, d, "2001-06-01", Some("2001-01-01"),
+          edits = true, tomb = None, taxon = false)
+        Versioned.commitManifest(dir, "snp_root", Gen1,
+          f.writeSnapshots(dir, "snp", surveyFiles = 1)._2)
+        f.writeDeltas(dir, "snp")
+        Incremental.topologyCycle(s, dir,
+            Incremental.snapshotLane(s, dir, "snp_root", Gen2),
+            "snp_sstate", "snp_tstate", "snp_merged", "snp_sraw", "snp_traw",
+            None, f.lw, TopologyExport.Monthly)
+          .orderBy(col("district"), col("month"))
       },
       Some(partitionedTripsOracleSql)),
 
@@ -1765,84 +1414,28 @@ object IoQueries extends QueryPack {
     // four-stage reprocess through the composition as q394's.
     Q("q399_touched_export",
       (s, d) => {
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q399_tex")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
+        val f = topologyFixture(s, d, "2001-06-01", Some("2001-01-01"),
+          edits = true, tomb = Some(col("day") >= to_date(lit("2000-06-01"))),
+          taxon = true)
+        // persisted: the prior merge and the prior rollup both read it
+        val mPrior = f.mPrior
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        val cutoff = to_date(lit("2001-06-01"))
-        val tripCut = to_date(lit("2001-01-01"))
-        val tombCut = to_date(lit("2000-06-01"))
-        val prior = flat.filter($"day" < cutoff)
-        val edited = prior
-          .filter($"submission_id" % 23 === 0 && $"day" >= tripCut)
-          .withColumn("sg", $"sg".withField("length_bins",
-            transform($"sg.length_bins", b => struct(
-              b.getField("length_class").as("length_class"),
-              greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val dupTrips = trips
-          .filter($"trip_id" % 51 === 0 && $"landing_date" >= tripCut)
-          .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
-            (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys :+ "catch_taxon")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val subPrior = sPrior.groupBy($"submission_id", $"district",
-            $"month", $"imei", $"landing_date")
-          .agg(sum($"n").as("n"), sum($"sum_cents").as("sum_cents"))
-        val tPrior = trips.filter($"landing_date" < tripCut)
-        val lm = trunc($"landing_date", "month").as("lmonth")
-        val mPrior = graft.ops.GatedMerge.gatedOneToOne(subPrior, tPrior,
-            keys)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Versioned.writePartitionedFull(sPrior, dir, "tex_sstate",
-          Seq("month"))
-        Versioned.writePartitionedFull(tPrior.withColumn("lmonth", lm),
-          dir, "tex_tstate", Seq("lmonth"))
-        Versioned.writePartitionedFull(mPrior.withColumn("lmonth", lm),
-          dir, "tex_merged", Seq("lmonth"))
+        f.writePartitioned(dir, "tex")
         // prior export roots: the products the O(touched) cycle merges
         // its touched months into
-        Versioned.writePartitionedFull(
-          mPrior.filter($"submission_id".isNotNull)
-            .groupBy($"district", $"month")
-            .agg(sum($"n").as("n_rows"), sum($"sum_cents").as("sum_cents"),
-              count($"trip_id").as("n_matched"),
-              coalesce(sum(when($"trip_id".isNotNull, $"duration_sec")),
-                lit(0L)).as("dur_sec")),
+        Versioned.writePartitionedFull(Incremental.monthlyExport(mPrior),
           dir, "tex_rollup", Seq("month"))
         Versioned.writePartitionedFull(
-          graft.pipeline.Incremental.derivedExportProducts(sPrior,
-            topN = 3),
+          Incremental.derivedExportProducts(f.sPrior, topN = 3),
           dir, "tex_comp", Seq("month"))
-        Versioned.write(
-          nest(flat.filter($"day" >= cutoff).unionByName(edited))
-            .coalesce(4),
-          dir, "tex_sraw", "00000002_bbb")
-        Versioned.write(
-          trips.filter($"landing_date" >= tripCut).unionByName(dupTrips),
-          dir, "tex_traw", "00000002_bbb")
-        Versioned.write(
-          prior.filter($"submission_id" % 31 === 0 && $"day" >= tombCut)
-            .select($"submission_id", $"month").distinct(),
-          dir, "tex_tomb", "00000002_bbb")
-        val out = graft.pipeline.Incremental
-          .chainedTopologyTouchedExportCycle(s, dir, "tex_sstate",
-            "tex_tstate", "tex_merged", "tex_rollup", "tex_comp",
-            "tex_sraw", "tex_traw", "tex_tomb", lw, topN = 3)
-          .orderBy($"district", $"month", $"rnk")
+        f.writeDeltas(dir, "tex")
+        val out = Incremental.topologyCycle(s, dir,
+            Incremental.inPlaceLane(s, dir),
+            "tex_sstate", "tex_tstate", "tex_merged", "tex_sraw", "tex_traw",
+            Some("tex_tomb"), f.lw,
+            TopologyExport.TouchedProducts(topN = 3, "tex_rollup", "tex_comp"))
+          .orderBy(col("district"), col("month"), col("rnk"))
         mPrior.unpersist(blocking = false)
         out
       },
@@ -3003,78 +2596,27 @@ object IoQueries extends QueryPack {
         val s = s0.newSession()
         s.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
           "false")
-        import s.implicits._
         val dir = graft.core.Scratch.dir("q424_brt")
-        val lw = chainLwTable(s)
-        val flat = chainSurveyFlat(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val keys = Seq("imei", "landing_date")
-        def nest(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy($"submission_id", $"district", $"month", $"imei",
-              $"landing_date")
-            .agg(collect_list($"sg").as("species_groups"))
-        Option(new java.io.File(dir).listFiles()).foreach(_.toSeq
-          .filter(_.getName.startsWith("brt_root__")).foreach(_.delete()))
-        val cutoff = to_date(lit("2001-06-01"))
-        val tripCut = to_date(lit("2001-01-01"))
-        val prior = flat.filter($"day" < cutoff)
-        val edited = prior
-          .filter($"submission_id" % 23 === 0 && $"day" >= tripCut)
-          .withColumn("sg", $"sg".withField("length_bins",
-            transform($"sg.length_bins", b => struct(
-              b.getField("length_class").as("length_class"),
-              greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
-        val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
-          .select($"o_orderkey".as("trip_id"),
-            concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string"))
-              .as("imei"),
-            to_date($"o_orderdate").as("landing_date"),
-            ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
-        val dupTrips = trips
-          .filter($"trip_id" % 51 === 0 && $"landing_date" >= tripCut)
-          .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
-            (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
-        val sPrior = graft.pipeline.Incremental.submissionContrib(
-          graft.pipeline.Incremental.surveyProcess(nest(prior), lw,
-            Seq("district", "month") ++ keys), keys)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val tPrior = trips.filter($"landing_date" < tripCut)
-        val lm = trunc($"landing_date", "month").as("lmonth")
-        val g1 = "00000001_aaa"
+        val f = topologyFixture(s, d, "2001-06-01", Some("2001-01-01"),
+          edits = true, tomb = None, taxon = false)
         // FAT survey months (the posture where the probe matters) with
         // the bloom sidecar + spec pinned at the initial commit
-        val sP = Versioned.writeSnapshotFull(sPrior, dir, "brt_sstate",
-          "month", g1, filesPerPartition = 8)
-        val sPins1 = sP.map(_.toString -> g1).toMap
+        val (sP, pins) = f.writeSnapshots(dir, "brt", surveyFiles = 8)
         val bP = graft.io.FileStats.writeSnapshotBloomSidecar(s, dir,
-          "brt_sstate", "month", "submission_id", sPins1, sP.toSeq, g1,
+          "brt_sstate", "month", "submission_id",
+          sP.map(_.toString -> Gen1).toMap, sP.toSeq, Gen1,
           itemsPerFile = 100000L, numBits = 200000L)
-        val tP = Versioned.writeSnapshotFull(tPrior.withColumn("lmonth", lm),
-          dir, "brt_tstate", "lmonth", g1)
-        val mP = Versioned.writeSnapshotFull(
-          graft.ops.GatedMerge.gatedOneToOne(sPrior, tPrior, keys)
-            .withColumn("lmonth", lm),
-          dir, "brt_merged", "lmonth", g1)
-        Versioned.commitManifest(dir, "brt_root", g1,
-          sP.map(v => Versioned.snapshotPinKey("brt_sstate", v) -> g1)
-            .toMap ++
+        Versioned.commitManifest(dir, "brt_root", Gen1, pins ++
           bP.map(v => Versioned.snapshotPinKey(
-            graft.io.FileStats.bloomPrefix("brt_sstate"), v) -> g1) ++
-          tP.map(v => Versioned.snapshotPinKey("brt_tstate", v) -> g1) ++
-          mP.map(v => Versioned.snapshotPinKey("brt_merged", v) -> g1) +
+            graft.io.FileStats.bloomPrefix("brt_sstate"), v) -> Gen1) +
           graft.io.FileStats.bloomSpecEntry("brt_sstate",
             "submission_id", 100000L, 200000L))
-        Versioned.write(
-          nest(flat.filter($"day" >= cutoff).unionByName(edited))
-            .coalesce(4),
-          dir, "brt_sraw", "00000002_bbb")
-        Versioned.write(
-          trips.filter($"landing_date" >= tripCut).unionByName(dupTrips),
-          dir, "brt_traw", "00000002_bbb")
-        graft.pipeline.Incremental.chainedTripsSnapshotCycle(s, dir,
-            "brt_root", "brt_sstate", "brt_tstate", "brt_merged",
-            "brt_sraw", "brt_traw", lw, gen = "00000002_bbb")
-          .orderBy($"district", $"month")
+        f.writeDeltas(dir, "brt")
+        Incremental.topologyCycle(s, dir,
+            Incremental.snapshotLane(s, dir, "brt_root", Gen2),
+            "brt_sstate", "brt_tstate", "brt_merged", "brt_sraw", "brt_traw",
+            None, f.lw, TopologyExport.Monthly)
+          .orderBy(col("district"), col("month"))
       },
       Some(partitionedTripsOracleSql)),
 
@@ -3813,6 +3355,160 @@ object IoQueries extends QueryPack {
        |  SELECT * FROM calc
        |  WHERE submission_id NOT IN (SELECT submission_id FROM bad))"""
       .stripMargin
+
+  /** Generations of the trips/topology fixtures: the prior state is
+    * `Gen1`, the nightly batch and the cycle's publish `Gen2`.
+    */
+  private val Gen1 = "00000001_aaa"
+  private val Gen2 = "00000002_bbb"
+
+  /** Drop `root`'s manifest generations left in `dir` by an earlier run
+    * of the same query: the fresh `Gen1` commit would otherwise read as
+    * stale next to that run's `Gen2`.
+    */
+  private def dropManifests(dir: String, root: String): Unit =
+    Option(new java.io.File(dir).listFiles()).foreach(_.toSeq
+      .filter(_.getName.startsWith(s"${root}__")).foreach(_.delete()))
+
+  /** One trips/topology fixture (q387–q424): the prior state, the
+    * nightly batch, and the lw table of the chained survey pipeline. Its
+    * frames are lazy; the writers lay them out per lane under the
+    * query's short name `t` (`<t>_sstate`, `<t>_tstate`, `<t>_merged`,
+    * `<t>_sraw`, `<t>_traw`, `<t>_tomb`, manifest `<t>_root`).
+    */
+  private final case class TopologyFixture(
+      lw: org.apache.spark.sql.DataFrame,
+      sPrior: org.apache.spark.sql.DataFrame,
+      tPrior: org.apache.spark.sql.DataFrame,
+      mPrior: org.apache.spark.sql.DataFrame,
+      sRaw: org.apache.spark.sql.DataFrame,
+      tRaw: org.apache.spark.sql.DataFrame,
+      tomb: Option[org.apache.spark.sql.DataFrame]) {
+
+    /** The nightly batch as `Gen2` objects. */
+    def writeDeltas(dir: String, t: String): Unit = {
+      Versioned.write(sRaw, dir, s"${t}_sraw", Gen2)
+      Versioned.write(tRaw, dir, s"${t}_traw", Gen2)
+      tomb.foreach(Versioned.write(_, dir, s"${t}_tomb", Gen2))
+    }
+
+    /** The prior state as `Gen1` objects, pinned by a fresh manifest
+      * `<t>_root` when `manifest`.
+      */
+    def writeObjects(dir: String, t: String, manifest: Boolean): Unit = {
+      val roots = Seq(sPrior -> s"${t}_sstate", tPrior -> s"${t}_tstate",
+        mPrior -> s"${t}_merged")
+      roots.foreach { case (df, p) => Versioned.write(df, dir, p, Gen1) }
+      if (manifest) {
+        dropManifests(dir, s"${t}_root")
+        Versioned.commitManifest(dir, s"${t}_root", Gen1,
+          roots.map(_._2 -> Gen1).toMap)
+      }
+    }
+
+    /** The prior state as in-place month-partitioned roots. */
+    def writePartitioned(dir: String, t: String): Unit = {
+      Versioned.writePartitionedFull(sPrior, dir, s"${t}_sstate",
+        Seq("month"))
+      Versioned.writePartitionedFull(byLandingMonth(tPrior), dir,
+        s"${t}_tstate", Seq("lmonth"))
+      Versioned.writePartitionedFull(byLandingMonth(mPrior), dir,
+        s"${t}_merged", Seq("lmonth"))
+    }
+
+    /** The prior state as `Gen1` snapshot roots, the survey state in
+      * `surveyFiles` files per month, for a fresh manifest `<t>_root`.
+      * @return the survey state's months and the manifest entries
+      *         pinning all three roots
+      */
+    def writeSnapshots(dir: String, t: String,
+                       surveyFiles: Int): (Set[Any], Map[String, String]) = {
+      dropManifests(dir, s"${t}_root")
+      val sP = Versioned.writeSnapshotFull(sPrior, dir, s"${t}_sstate",
+        "month", Gen1, surveyFiles)
+      val tP = Versioned.writeSnapshotFull(byLandingMonth(tPrior), dir,
+        s"${t}_tstate", "lmonth", Gen1)
+      val mP = Versioned.writeSnapshotFull(byLandingMonth(mPrior), dir,
+        s"${t}_merged", "lmonth", Gen1)
+      (sP, Seq(s"${t}_sstate" -> sP, s"${t}_tstate" -> tP,
+        s"${t}_merged" -> mP).flatMap { case (p, vs) =>
+        vs.map(v => Versioned.snapshotPinKey(p, v) -> Gen1) }.toMap)
+    }
+
+    private def byLandingMonth(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("lmonth", trunc(col("landing_date"), "month"))
+  }
+
+  /** The trips/topology fixture over lineitem ⋈ orders
+    * ([[chainSurveyFlat]]): surveys landing before `cutoff` are the
+    * prior state and the rest arrive in the nightly survey delta. With
+    * `tripCut`, trips landing from it on arrive late; without it, every
+    * 30th trip does. With `edits`, the delta also carries (a) every
+    * 23rd prior submission re-pulled with its bin counts halved (floor
+    * 1) — the validator's resubmission edit — and (b) a seeded SECOND
+    * trip (trip_id + 1, same device-day) for every 51st trip, so a
+    * published 1:1 match must UN-MERGE; `tripCut` confines both to
+    * landings from it on. `tomb` names which every-31st prior
+    * submissions a takedown batch of (submission_id, month) rows
+    * removes. The prior contributions keep taxon grain when `taxon`;
+    * the prior merge gates them at submission grain either way.
+    */
+  private def topologyFixture(s: org.apache.spark.sql.SparkSession,
+                              d: String, cutoff: String,
+                              tripCut: Option[String], edits: Boolean,
+                              tomb: Option[org.apache.spark.sql.Column],
+                              taxon: Boolean): TopologyFixture = {
+    import s.implicits._
+    val keys = Seq("imei", "landing_date")
+    val lw = chainLwTable(s)
+    // persisted: the fixture writes and the cycle's delta both read it;
+    // unpersisted each would re-run the lineitem ⋈ orders scan
+    val flat = chainSurveyFlat(s, d)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def nest(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy($"submission_id", $"district", $"month", $"imei",
+          $"landing_date")
+        .agg(collect_list($"sg").as("species_groups"))
+    val late = tripCut.map(c => to_date(lit(c)))
+    def fromTripCut(df: org.apache.spark.sql.DataFrame, day: String) =
+      late.fold(df)(c => df.filter(col(day) >= c))
+    val prior = flat.filter($"day" < to_date(lit(cutoff)))
+    val edited = fromTripCut(prior.filter($"submission_id" % 23 === 0), "day")
+      .withColumn("sg", $"sg".withField("length_bins",
+        transform($"sg.length_bins", b => struct(
+          b.getField("length_class").as("length_class"),
+          greatest(lit(1L), shiftright(b.getField("n"), 1)).as("n")))))
+    val trips = Tables.orders(s, d).filter($"o_orderkey" % 3 === 0)
+      .select($"o_orderkey".as("trip_id"),
+        concat(lit("IMEI"), ($"o_orderkey" % 97).cast("string")).as("imei"),
+        to_date($"o_orderdate").as("landing_date"),
+        ($"o_orderkey" % 7000 + 3600).cast("long").as("duration_sec"))
+    val dupTrips = fromTripCut(trips.filter($"trip_id" % 51 === 0),
+        "landing_date")
+      .select(($"trip_id" + 1).as("trip_id"), $"imei", $"landing_date",
+        (($"trip_id" + 1) % 7000 + 3600).cast("long").as("duration_sec"))
+    val (tPrior, tDelta) = late.fold((trips.filter($"trip_id" % 30 =!= 0),
+        trips.filter($"trip_id" % 30 === 0)))(c =>
+      (trips.filter($"landing_date" < c), trips.filter($"landing_date" >= c)))
+    // persisted: its own write and the prior merge both consume it
+    val sPrior = Incremental.submissionContrib(
+      Incremental.surveyProcess(nest(prior), lw,
+        Seq("district", "month") ++ keys),
+        if (taxon) keys :+ "catch_taxon" else keys)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the 1:1 gate counts SUBMISSIONS per device-day
+    val subPrior = if (!taxon) sPrior
+      else sPrior.groupBy($"submission_id", $"district", $"month", $"imei",
+          $"landing_date")
+        .agg(sum($"n").as("n"), sum($"sum_cents").as("sum_cents"))
+    val sNew = flat.filter($"day" >= to_date(lit(cutoff)))
+    TopologyFixture(lw, sPrior, tPrior,
+      graft.ops.GatedMerge.gatedOneToOne(subPrior, tPrior, keys),
+      nest(if (edits) sNew.unionByName(edited) else sNew).coalesce(4),
+      if (edits) tDelta.unionByName(dupTrips) else tDelta,
+      tomb.map(p => prior.filter($"submission_id" % 31 === 0 && p)
+        .select($"submission_id", $"month").distinct()))
+  }
 
   /** Per-taxon LW + length-bound metadata for the chained incremental
     * cycle (q375): broadcast-sized, mirrored by the oracle's VALUES

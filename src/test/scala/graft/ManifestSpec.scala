@@ -108,9 +108,11 @@ class ManifestSpec extends SparkTestBase {
     val lw = graft.queries.IoQueries.chainLwTable(spark)
     assert(Versioned.latestManifest(dir, "man_root")
       .exists(_._1 == "00000002_bbb"))
-    val second = graft.pipeline.Incremental.chainedTripsManifestCycle(
-        spark, dir, "man_root", "man_sstate", "man_tstate", "man_merged",
-        "man_sraw", "man_traw", lw, "00000002_bbb")
+    val second = graft.pipeline.Incremental.topologyCycle(spark, dir,
+        graft.pipeline.Incremental.manifestLane(spark, dir, "man_root",
+          "00000002_bbb"), "man_sstate", "man_tstate", "man_merged",
+        "man_sraw", "man_traw", None, lw,
+        graft.pipeline.Incremental.TopologyExport.Monthly)
       .collect().map(_.toSeq).toSet
     assert(second == first,
       "replaying the manifest cycle changed the published export")

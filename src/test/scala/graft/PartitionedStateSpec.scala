@@ -4,14 +4,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.io.Versioned
 import graft.pipeline.Incremental
+import graft.pipeline.Incremental.TopologyExport
 
-/** The 100 TB publish path ([[Incremental.chainedTripsPartitionedCycle]]):
+/** The 100 TB publish path ([[Incremental.inPlaceLane]]):
   * a nightly cycle over month-partitioned state must (a) equal the full
   * four-stage reprocess (the q390 oracle re-proves this against DuckDB),
   * (b) leave untouched month partitions BYTE-IDENTICAL — never listed
   * for rewrite, never modified — across all three state roots, and
   * (c) write a small fraction of the bytes the object-versioned twin
-  * ([[Incremental.chainedTripsCycle]]) writes on the same fixture,
+  * ([[Incremental.objectLane]]) writes on the same fixture,
   * because the object lane rewrites each full accumulated state per
   * publish while this lane rewrites only the touched months.
   */
@@ -110,8 +111,9 @@ class PartitionedStateSpec extends SparkTestBase {
       octFiles("pst_m", "lmonth"))
     assert(before.forall(_.nonEmpty), "fixture wrote no October partitions")
     Thread.sleep(1100) // mtime granularity guard
-    val out = Incremental.chainedTripsPartitionedCycle(spark, dir,
-        "pst_s", "pst_t", "pst_m", "pst_sraw", "pst_traw", lw)
+    val out = Incremental.topologyCycle(spark, dir,
+        Incremental.inPlaceLane(spark, dir), "pst_s", "pst_t", "pst_m",
+        "pst_sraw", "pst_traw", None, lw, TopologyExport.Monthly)
       .collect().map(_.toSeq).toSet
     val after = Seq(octFiles("pst_s", "month"), octFiles("pst_t", "lmonth"),
       octFiles("pst_m", "lmonth"))
@@ -210,8 +212,10 @@ class PartitionedStateSpec extends SparkTestBase {
     Versioned.write(sDelta, dirO, "bo_sraw", "00000002_b")
     Versioned.write(tDelta, dirO, "bo_traw", "00000002_b")
     val objTask = bytesWritten {
-      Incremental.chainedTripsCycle(spark, dirO, "bo_s", "bo_t", "bo_m",
-        "bo_sraw", "bo_traw", lw, "00000002_b").count()
+      Incremental.topologyCycle(spark, dirO,
+        Incremental.objectLane(spark, dirO, "00000002_b"), "bo_s", "bo_t",
+        "bo_m", "bo_sraw", "bo_traw", None, lw, TopologyExport.Monthly)
+        .count()
       ()
     }
     // what landed in the STORE: the cycle's three published state objects
@@ -230,8 +234,9 @@ class PartitionedStateSpec extends SparkTestBase {
     Thread.sleep(1100) // mtime granularity
     val t0 = System.currentTimeMillis
     val partTask = bytesWritten {
-      Incremental.chainedTripsPartitionedCycle(spark, dirP, "bp_s", "bp_t",
-        "bp_m", "bp_sraw", "bp_traw", lw).count()
+      Incremental.topologyCycle(spark, dirP,
+        Incremental.inPlaceLane(spark, dirP), "bp_s", "bp_t", "bp_m",
+        "bp_sraw", "bp_traw", None, lw, TopologyExport.Monthly).count()
       ()
     }
     // what the cycle REWROTE in the store: files newer than t0 across
@@ -289,9 +294,10 @@ class PartitionedStateSpec extends SparkTestBase {
     assert(before.forall(_.nonEmpty), "fixture wrote no old-month partitions")
     Thread.sleep(1100)
     val lw = graft.queries.IoQueries.chainLwTable(spark)
-    val second = graft.pipeline.Incremental.chainedTopologyPartitionedCycle(
-        spark, dir, "pxt_sstate", "pxt_tstate", "pxt_merged", "pxt_sraw",
-        "pxt_traw", "pxt_tomb", lw, topN = 3)
+    val second = Incremental.topologyCycle(spark, dir,
+        Incremental.inPlaceLane(spark, dir), "pxt_sstate", "pxt_tstate",
+        "pxt_merged", "pxt_sraw", "pxt_traw", Some("pxt_tomb"), lw,
+        TopologyExport.Products(topN = 3))
       .collect().map(_.toSeq).toSet
     assert(oldMonths == before,
       "re-applying the cycle touched a month outside the delta/takedown window")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.io.Versioned
 
 /** The generation-pinned snapshot lane
-  * ([[graft.pipeline.Incremental.chainedTripsSnapshotCycle]], q403):
+  * ([[graft.pipeline.Incremental.snapshotLane]], q403):
   * the partitioned topology with all-or-nothing reads. These pins
   * certify what the q403 oracle can't see: a crashed publish's
   * half-written generations are INVISIBLE to manifest readers (the
@@ -89,9 +89,11 @@ class SnapshotLaneSpec extends SparkTestBase {
     assert(servedCounts == countsAtG2,
       "a reader saw a crashed publish's half-written generation")
     // ---- the replayed cycle completes from the intact prior pins
-    val second = graft.pipeline.Incremental.chainedTripsSnapshotCycle(
-        spark, dir, "snp_root", "snp_sstate", "snp_tstate", "snp_merged",
-        "snp_sraw", "snp_traw", lw, gen = "00000003_ccc")
+    val second = graft.pipeline.Incremental.topologyCycle(spark, dir,
+        graft.pipeline.Incremental.snapshotLane(spark, dir, "snp_root",
+          "00000003_ccc"), "snp_sstate", "snp_tstate", "snp_merged",
+        "snp_sraw", "snp_traw", None, lw,
+        graft.pipeline.Incremental.TopologyExport.Monthly)
       .collect().map(_.toSeq).toSet
     assert(second == first,
       "re-applying the same batch at the next generation changed the export")
@@ -370,9 +372,11 @@ class SnapshotLaneSpec extends SparkTestBase {
     // replaying the cycle at the committed tag is unchanged (oracle
     // posture: the probe is read-path only)
     val lw = graft.queries.IoQueries.chainLwTable(spark)
-    val replay = graft.pipeline.Incremental.chainedTripsSnapshotCycle(
-        spark, dir, "brt_root", "brt_sstate", "brt_tstate", "brt_merged",
-        "brt_sraw", "brt_traw", lw, gen = "00000002_bbb")
+    val replay = graft.pipeline.Incremental.topologyCycle(spark, dir,
+        graft.pipeline.Incremental.snapshotLane(spark, dir, "brt_root",
+          "00000002_bbb"), "brt_sstate", "brt_tstate", "brt_merged",
+        "brt_sraw", "brt_traw", None, lw,
+        graft.pipeline.Incremental.TopologyExport.Monthly)
       .collect().map(_.toSeq).toSet
     assert(replay == first, "replay at the committed tag drifted")
   }

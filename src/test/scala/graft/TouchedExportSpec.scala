@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.Versioned
 
 /** The O(touched) export lane
-  * ([[graft.pipeline.Incremental.chainedTopologyTouchedExportCycle]],
+  * ([[graft.pipeline.Incremental.TopologyExport.TouchedProducts]],
   * q399): the derived products (monthly rollup, composition + JSON doc)
   * are month-partitioned state, re-derived only for the cycle's touched
   * months. These pins certify what the q399 oracle can't see: the
@@ -80,10 +80,11 @@ class TouchedExportSpec extends SparkTestBase {
     // measuring its total task input bytes
     var second: Set[Seq[Any]] = Set.empty
     val touchedBytes = bytesRead {
-      second = graft.pipeline.Incremental.chainedTopologyTouchedExportCycle(
-          spark, dir, "tex_sstate", "tex_tstate", "tex_merged",
-          "tex_rollup", "tex_comp", "tex_sraw", "tex_traw", "tex_tomb",
-          lw, topN = 3)
+      second = graft.pipeline.Incremental.topologyCycle(spark, dir,
+          graft.pipeline.Incremental.inPlaceLane(spark, dir), "tex_sstate",
+          "tex_tstate", "tex_merged", "tex_sraw", "tex_traw",
+          Some("tex_tomb"), lw, graft.pipeline.Incremental.TopologyExport
+            .TouchedProducts(topN = 3, "tex_rollup", "tex_comp"))
         .collect().map(_.toSeq).toSet
     }
     assert(oldMonths == before,
