@@ -9,7 +9,11 @@ import scala.collection.mutable
   * action, same session config) but with a job-level listener that
   * prints every Spark job's wall time and call site, so a fixture-heavy
   * query's seconds can be attributed to its individual actions
-  * (writes, collects, checkpoints, the final count). Also writes the
+  * (writes, collects, checkpoints, the final count), and the warm rep's
+  * code-generation compiles (count and total compile time, from
+  * Spark's `CodegenMetrics` and `CodeGenerator.compileTime`) — a warm
+  * rep that still compiles is paying for constants written into
+  * generated code. Also writes the
   * final frame's `explain("formatted")` to `plans/r15/<name>_<suffix>.txt`
   * when SPARK_GRAFT_PLAN_SUFFIX is set.
   *
@@ -53,6 +57,7 @@ object Probe {
       spark.sparkContext.getPersistentRDDs.foreach(_._2.unpersist(false))
       jobs.clear()
       if (rep == reps) spark.sparkContext.addSparkListener(listener)
+      val compiles0 = compiles()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tPlan = System.nanoTime()
@@ -62,6 +67,9 @@ object Probe {
       println(f"[probe] rep $rep: total ${(t1 - t0) / 1e9}%.2f s " +
         f"(build ${(tPlan - t0) / 1e9}%.2f s, action ${(t1 - tPlan) / 1e9}%.2f s), rows $n")
       if (rep == reps) {
+        val (n1, ns1) = compiles()
+        println(f"[probe] codegen: ${n1 - compiles0._1} compiles, " +
+          f"${(ns1 - compiles0._2) / 1e9}%.3f s compiling")
         Thread.sleep(200)
         val byDesc = jobs.synchronized {
           jobs.toSeq.filter(_.t1 > 0)
@@ -84,4 +92,11 @@ object Probe {
     }
     spark.stop()
   }
+
+  /** Code-generation compiles so far in this JVM, and their total
+    * nanoseconds.
+    */
+  private def compiles(): (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 }

@@ -5,15 +5,17 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the synthetic star-schema tables (see TESTDATA.md).
   *
-  * All loaders are plain `spark.read.parquet` so Catalyst's column pruning
-  * and filter pushdown reach the scan (`PushedFilters` / `ReadSchema` in
-  * `.explain`). At 100 TB these files become partitioned directories; the
-  * loaders are the single seam where partition-pruning predicates would be
-  * injected.
+  * All loaders are plain parquet reads so Catalyst's column pruning and
+  * filter pushdown reach the scan (`PushedFilters` / `ReadSchema` in
+  * `.explain`). The schema is read from one footer on the driver
+  * ([[graft.io.Versioned.readObject]]), so a load launches no
+  * schema-inference job. At 100 TB these files become partitioned
+  * directories; the loaders are the single seam where partition-pruning
+  * predicates would be injected.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.io.Versioned.readObject(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")
@@ -56,7 +58,8 @@ object Tables {
   /** Events loader; `ts` is normalized to TimestampType regardless of how
     * the parquet stores it (see [[normalizeEventTs]]). The legacy nanos
     * conf is set defensively in case the session was built elsewhere —
-    * it is a no-op for non-NANOS files.
+    * it is a no-op for non-NANOS files. It is set before the load: the
+    * footer probe converts with the session's conf.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

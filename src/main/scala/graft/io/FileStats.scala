@@ -708,22 +708,23 @@ object FileStats {
   }
 
   // ---- cached sidecar rows (snapshot-lane candidate planning) ----------
-  // Sidecar generations are immutable once written, so the rows of a
-  // pinned sidecar file never change under its (path, length, mtime):
-  // candidate planning reads them once and then plans every later read
-  // on the driver. The pinned leaves are listed through the Hadoop
-  // FileSystem; a file whose (path, length, mtime) is not cached — new
-  // generation, compaction, or a file replaced in place — is loaded,
-  // all misses together in one job labelled `filestats.sidecarLoad`.
-  // The engine never rewrites a sidecar file under its own name (a
-  // replayed publish writes new file names), so only a hand-made
-  // replacement of equal length within the store's mtime granularity
-  // could alias a cached entry. The planning frame over the cached rows is a LocalRelation, so the
-  // filters the callers apply run on the driver (ConvertToLocalRelation)
-  // and collect without a job. A selection whose files would not fit
-  // the cache plans through the distributed read instead (the bloom
-  // probe then stays in executors, the driver-OOM guard of
-  // [[bloomCandidateFrame]]).
+  // Sidecar generations and pinned delete-vector generations are
+  // immutable once written, so the rows of a pinned file never change
+  // under its (path, length, mtime): planning reads them once and then
+  // plans every later read on the driver. The pinned leaves are listed
+  // through the Hadoop FileSystem; a file whose (path, length, mtime) is
+  // not cached — new generation, compaction, or a file replaced in
+  // place — is loaded, all misses together in one job labelled
+  // `filestats.sidecarLoad`. The engine never rewrites a sidecar file
+  // under its own name (a replayed publish writes new file names), so
+  // only a hand-made replacement of equal length within the store's
+  // mtime granularity could alias a cached entry. The planning frame
+  // over the cached rows is a LocalRelation, so the filters the callers
+  // apply run on the driver (ConvertToLocalRelation) and collect
+  // without a job. A selection whose files would not fit the cache
+  // plans through the distributed read instead (the bloom probe then
+  // stays in executors, the driver-OOM guard of [[bloomCandidateFrame]];
+  // delete vectors then apply as an anti-join).
 
   /** LRU bound of the sidecar row cache, in estimated heap bytes. */
   private val SidecarCacheMaxBytes: Long = 64L << 20
@@ -792,32 +793,46 @@ object FileStats {
     true
   }
 
-  /** The rows of the `sidePrefix` sidecar generations `sel` pins, as a
-    * driver-local frame from the cache — None when a leaf is not
-    * listable, the selection does not fit the cache, or its files
-    * disagree on schema (the caller then reads them distributed).
+  /** The cached rows of the immutable snapshot root `sidePrefix`
+    * (partitioned by `partCol`) at the `sel` pins, with their one
+    * schema, per pinned partition value in value order. None when a
+    * leaf is not listable, the selection does not fit the cache, or
+    * its files disagree on schema. Serves the sidecars and the pinned
+    * delete vectors ([[Versioned.applyPinnedDeleteVectors]]) alike.
     */
-  private def cachedSidecar(spark: SparkSession, dir: String,
-                            sidePrefix: String,
-                            sel: Map[String, String]): Option[DataFrame] = {
+  private[io] def cachedLeafRows(spark: SparkSession, dir: String,
+                                 sidePrefix: String, partCol: String,
+                                 sel: Map[String, String])
+      : Option[(StructType, Seq[(String, Seq[Row])])] = {
     val conf = GraftShim.hadoopConf(spark)
     val root = Versioned.snapshotRoot(dir, sidePrefix)
     val leaves = sel.toSeq.sorted.map { case (v, g) =>
-      Versioned.leafFiles(conf, root, "part", v, g) }
-    if (leaves.exists(_.isEmpty)) return None
-    val files = leaves.flatten.flatten
+      v -> Versioned.leafFiles(conf, root, partCol, v, g) }
+    if (leaves.exists(_._2.isEmpty)) return None
+    val files = leaves.flatMap(_._2.get)
     val missing = files.filter(SidecarCache.get(_).isEmpty)
     if (missing.nonEmpty && !loadSidecarRows(spark, conf, sidePrefix, missing))
       return None
-    val got = files.map(SidecarCache.get)
-    val schemas = got.flatten.map(_.schema).distinct
-    if (got.exists(_.isEmpty) || schemas.size != 1) None
-    else {
-      import scala.jdk.CollectionConverters._
-      Some(spark.createDataFrame(got.flatten.flatMap(_.rows).asJava,
-        schemas.head))
-    }
+    val got = leaves.map { case (v, fs) => v -> fs.get.map(SidecarCache.get) }
+    val all = got.flatMap(_._2)
+    val schemas = all.flatten.map(_.schema).distinct
+    if (all.exists(_.isEmpty) || schemas.size != 1) None
+    else Some((schemas.head,
+      got.map { case (v, es) => v -> es.flatMap(_.get.rows.toSeq) }))
   }
+
+  /** The rows of the `sidePrefix` sidecar generations `sel` pins, as a
+    * driver-local frame from the cache — None when [[cachedLeafRows]]
+    * cannot serve them (the caller then reads them distributed).
+    */
+  private def cachedSidecar(spark: SparkSession, dir: String,
+                            sidePrefix: String,
+                            sel: Map[String, String]): Option[DataFrame] =
+    cachedLeafRows(spark, dir, sidePrefix, "part", sel).map {
+      case (schema, leaves) =>
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(leaves.flatMap(_._2).asJava, schema)
+    }
 
   /** A sidecar's rows at explicit pins, restricted to `parts`, for
     * candidate planning: the cached driver-local frame when it applies,

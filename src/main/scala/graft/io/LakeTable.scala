@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ONE audited read path over the lakehouse lanes.
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   *   manifest (as-of or latest) → partition restriction → zone-map /
   *   bloom file skipping (intersected when both prune) → residual
-  *   predicates → deletion-vector anti-join → mergeSchema.
+  *   predicates → deletion vectors → mergeSchema.
   *
   * Laws (LakeTableSpec pins each cell of the matrix
   * {latest, as-of} × {zone, bloom, both, none} × {DV, clean} ×
@@ -53,7 +53,15 @@ import org.apache.spark.sql.functions._
   *    replaced in place is a miss, never a stale hit. Misses load in
   *    one job labelled `filestats.sidecarLoad`; the cache is a fixed
   *    LRU bound, and a selection too large for it plans through the
-  *    distributed sidecar read instead.
+  *    distributed sidecar read instead;
+  *  - pinned delete vectors apply from the same cache
+  *    ([[Versioned.applyPinnedDeleteVectors]]): only the vectors of the
+  *    partitions the read can return load, and they apply as a
+  *    null-safe plan filter, so a warm read with vectors runs the same
+  *    jobs as its twin without them (no DV scan, no broadcast). Vectors
+  *    the cache cannot serve (over its bound, an unlistable leaf,
+  *    files that disagree on schema) apply as a left anti-join on
+  *    (partition, key); the in-place erasure lane always does.
   *
   * Commit contract of [[commitSnapshot]] and the snapshot-lane DV
   * commit ([[Versioned.commitSnapshotDeleteVectors]]; CommitPlanningSpec
@@ -370,12 +378,9 @@ object LakeTable {
     }
     def pinsOf(p: String): Map[String, String] = Versioned.pinsIn(entries, p)
 
-    def inPlaceHas(p: String): Boolean = {
-      val root = new java.io.File(Versioned.partitionedRoot(dir, p))
-      root.isDirectory && Option(root.listFiles()).exists(_.exists(d =>
-        d.isDirectory && Option(d.listFiles()).exists(
-          _.exists(_.getName.endsWith(".parquet")))))
-    }
+    def inPlaceHas(p: String): Boolean =
+      Versioned.partitionedHasData(GraftShim.hadoopConf(spark),
+        Versioned.partitionedRoot(dir, p))
 
     // ---- file skipping: each Some(files) is a conservative superset
     // of the rows' holders; two independent prunings intersect
@@ -515,16 +520,9 @@ object LakeTable {
     val filtered = withParts.filter(rangeResid && pointResid && keysResid)
 
     // ---- deletion vectors, both postures; the DV key column is read
-    // off the sidecar itself (its schema is exactly (partCol, key)), so
-    // a caller can never forget the anti-join and resurrect deleted
+    // off the vectors themselves (their schema is exactly (partCol,
+    // key)), so a caller can never forget them and resurrect deleted
     // rows.
-    def dvKey(cols: Seq[String]): String = {
-      val keyCols = cols.filterNot(_ == partCol)
-      require(keyCols.length == 1,
-        s"DV sidecar of '$prefix' must carry exactly ($partCol, key), " +
-          s"got (${cols.mkString(", ")})")
-      keyCols.head
-    }
     // in-place lane = ERASURE: applies to every read including as-of
     // time travel (a GDPR erasure must reach history)
     val erased =
@@ -532,22 +530,22 @@ object LakeTable {
       else {
         val dv = Versioned.readPartitioned(spark, dir,
           Versioned.dvPrefix(prefix))
-        filtered.join(dv, Seq(partCol, dvKey(dv.columns.toSeq)),
+        filtered.join(dv, Seq(partCol,
+          Versioned.dvKeyColumn(prefix, partCol, dv.columns.toSeq)),
           "left_anti")
       }
     // manifest-pinned lane = TRANSACTIONAL: the vectors the RESOLVED
     // manifest pins — an as-of read shows the delete state as of that
-    // tag, not today's (isolation, the audit/rollback posture)
+    // tag, not today's (isolation, the audit/rollback posture). Only
+    // the vectors of partitions this read can return apply.
     if (!snapshot) erased
     else {
-      val dvPins = pinsOf(Versioned.dvPrefix(prefix))
-      if (dvPins.isEmpty) erased
-      else {
-        val dv = Versioned.readSnapshotAt(spark, dir,
-          Versioned.dvPrefix(prefix), partCol, dvPins, None)
-        erased.join(dv, Seq(partCol, dvKey(dv.columns.toSeq)),
-          "left_anti")
+      val within = parts.fold(dataPins.keys) { vs =>
+        val want = vs.map(_.toString).toSet
+        dataPins.keys.filter(want)
       }
+      Versioned.applyPinnedDeleteVectors(spark, dir, prefix, partCol, None,
+        pinsOf(Versioned.dvPrefix(prefix)), within, erased)
     }
   }
 

@@ -42,16 +42,22 @@ object Versioned {
     */
   private def versionNames(dir: String, prefix: String): Seq[String] = {
     val d = new Path(dir)
-    val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(GraftShim.hadoopConf)
-      .getOrElse(new Configuration())
     val names =
-      try d.getFileSystem(conf).listStatus(d).toSeq.map(_.getPath.getName)
+      try d.getFileSystem(sessionConf()).listStatus(d).toSeq
+        .map(_.getPath.getName)
       catch { case _: java.io.FileNotFoundException => Seq.empty }
     names.filter(n => !hidden(n) && n.startsWith(s"${prefix}__") &&
         n.endsWith("__.parquet"))
       .sorted(Ordering[String].reverse)
   }
+
+  /** The Hadoop configuration of the active (else default) session, for
+    * metadata listings that take no session argument.
+    */
+  private def sessionConf(): Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(GraftShim.hadoopConf)
+      .getOrElse(new Configuration())
 
   def resolveLatest(dir: String, prefix: String): Option[String] =
     versionNames(dir, prefix).headOption.map(n => s"$dir/$n")
@@ -61,11 +67,13 @@ object Versioned {
     readObject(spark, resolveLatest(dir, prefix).getOrElse(
       throw new IllegalArgumentException(s"no versioned object for prefix '$prefix' in $dir")))
 
-  /** The versioned object at `path`. Its schema is read from ONE footer
-    * of the object's top-level data files on the driver (an object is
-    * one write, so it has one schema) and handed to the reader, so the
-    * read launches no schema-inference job. An object whose top level
-    * holds no data file (e.g. a partitioned layout) lets Spark infer.
+  /** The versioned object at `path`: a parquet directory or a single
+    * parquet file. Its schema is read from ONE footer of the object's
+    * top-level data files on the driver (an object is one write, so it
+    * has one schema) with the session's converter, and handed to the
+    * reader, so the read launches no schema-inference job. An object
+    * whose top level holds no data file (e.g. a partitioned layout) lets
+    * Spark infer.
     */
   def readObject(spark: SparkSession, path: String): DataFrame = {
     val conf = GraftShim.hadoopConf(spark)
@@ -299,11 +307,32 @@ object Versioned {
     * empty directory parquet cannot infer a schema from — "no data"
     * and "no root" mean the same thing to every DV path.
     */
-  private[io] def dvHasData(dir: String, dataPrefix: String): Boolean = {
-    val root = new java.io.File(partitionedRoot(dir, dvPrefix(dataPrefix)))
-    root.isDirectory && Option(root.listFiles()).exists(_.exists(d =>
-      d.isDirectory && Option(d.listFiles()).exists(
-        _.exists(_.getName.endsWith(".parquet")))))
+  private[io] def dvHasData(dir: String, dataPrefix: String): Boolean =
+    partitionedHasData(sessionConf(), partitionedRoot(dir, dvPrefix(dataPrefix)))
+
+  /** True when some partition directory of the partitioned root `root`
+    * holds a parquet file, listed through the Hadoop FileSystem; an
+    * empty or missing root holds no data.
+    */
+  private[io] def partitionedHasData(conf: Configuration,
+                                     root: String): Boolean = {
+    def dirs(p: Path) =
+      try p.getFileSystem(conf).listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    dirs(new Path(root)).exists(d => d.isDirectory &&
+      dirs(d.getPath).exists(_.getPath.getName.endsWith(".parquet")))
+  }
+
+  /** The key column of a DV sidecar with columns `cols`: its schema is
+    * exactly (partCol, key).
+    */
+  private[io] def dvKeyColumn(dataPrefix: String, partCol: String,
+                              cols: Seq[String]): String = {
+    val keyCols = cols.filterNot(_ == partCol)
+    require(keyCols.length == 1,
+      s"DV sidecar of '$dataPrefix' must carry exactly ($partCol, key), " +
+        s"got (${cols.mkString(", ")})")
+    keyCols.head
   }
 
   /** Record row-level deletes WITHOUT touching a data file: union the
@@ -1135,14 +1164,64 @@ object Versioned {
                               partCol: String, keyCol: String,
                               asOfTag: Option[String] = None): DataFrame = {
     val entries = resolveManifest(dir, manifestPrefix, asOfTag)
-    val data = readSnapshotAt(spark, dir, dataPrefix, partCol,
-      pinsIn(entries, dataPrefix), None)
-    val dvPins = pinsIn(entries, dvPrefix(dataPrefix))
-    if (dvPins.isEmpty) data
-    else data.join(
-      readSnapshotAt(spark, dir, dvPrefix(dataPrefix), partCol, dvPins,
-        None),
-      Seq(partCol, keyCol), "left_anti")
+    val dataPins = pinsIn(entries, dataPrefix)
+    applyPinnedDeleteVectors(spark, dir, dataPrefix, partCol, Some(keyCol),
+      pinsIn(entries, dvPrefix(dataPrefix)), dataPins.keys,
+      readSnapshotAt(spark, dir, dataPrefix, partCol, dataPins, None))
+  }
+
+  /** `df`, a snapshot-lane read of `dataPrefix` whose rows come from the
+    * `within` partitions (pin-key strings), minus the delete vectors
+    * `dvPins` pins: merge-on-read for every snapshot-lane reader.
+    *
+    * DV generations are immutable, like sidecars, so their rows come
+    * from the sidecar row cache ([[FileStats.cachedLeafRows]]: same
+    * (path, length, mtime) key, same bound, misses loaded in one job
+    * labelled `filestats.sidecarLoad`). Only the leaves of `within`
+    * load. They apply as one null-safe plan filter,
+    * `NOT coalesce(OR over p of (partCol = p AND key IN keys_p), false)`,
+    * each `p` typed as `df`'s partition column; null keys are dropped,
+    * as the anti-join never matches them. A warm read then scans only
+    * its data: no DV scan, no broadcast. When the rows do not fit the
+    * cache, a leaf cannot be listed or the files disagree on schema,
+    * the vectors apply as a left anti-join on (partCol, key).
+    *
+    * @param keyCol the key column the caller expects the vectors to
+    *               carry (None: whichever one they carry)
+    */
+  private[io] def applyPinnedDeleteVectors(spark: SparkSession, dir: String,
+                                           dataPrefix: String,
+                                           partCol: String,
+                                           keyCol: Option[String],
+                                           dvPins: Map[String, String],
+                                           within: Iterable[String],
+                                           df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    def checked(key: String): String = {
+      require(keyCol.forall(_ == key), s"delete vectors of '$dataPrefix' " +
+        s"carry key '$key', not '${keyCol.get}'")
+      key
+    }
+    val keep = within.toSet
+    val sel = dvPins.filter { case (v, _) => keep(v) }
+    val dvp = dvPrefix(dataPrefix)
+    if (sel.isEmpty) df
+    else FileStats.cachedLeafRows(spark, dir, dvp, partCol, sel) match {
+      case Some((schema, leaves)) if schema.size == 1 =>
+        val partType = df.schema(partCol).dataType
+        val key = col(checked(schema.head.name))
+        leaves.flatMap { case (v, rows) =>
+          val keys = rows.flatMap(r => Option(r.get(0))).distinct
+          if (keys.isEmpty) None
+          else Some(col(partCol) === lit(v).try_cast(partType) &&
+            key.isin(keys: _*))
+        }.reduceOption(_ || _)
+          .fold(df)(hit => df.filter(!coalesce(hit, lit(false))))
+      case _ =>
+        val dv = readSnapshotAt(spark, dir, dvp, partCol, sel, None)
+        df.join(dv, Seq(partCol, checked(dvKeyColumn(dataPrefix, partCol,
+          dv.columns.toSeq))), "left_anti")
+    }
   }
 
   /** Partitions of `prefix` whose pins DIFFER between two committed
@@ -1206,16 +1285,9 @@ object Versioned {
     def side(tag: String): DataFrame = {
       val entries = resolveManifest(dir, manifestPrefix, Some(tag))
       def pinsOf(p: String) = pinsIn(entries, p)
-      val data = readSnapshotAt(spark, dir, dataPrefix, partCol,
-        pinsOf(dataPrefix), Some(churned), mergeSchema = true)
-      val dvPins = pinsOf(dvp)
-      val pinned =
-        if (dvPins.isEmpty) data
-        else {
-          val dv = readSnapshotAt(spark, dir, dvp, partCol, dvPins,
-            Some(churned))
-          data.join(dv, dv.columns.toSeq, "left_anti")
-        }
+      val pinned = applyPinnedDeleteVectors(spark, dir, dataPrefix, partCol,
+        None, pinsOf(dvp), churned, readSnapshotAt(spark, dir, dataPrefix,
+          partCol, pinsOf(dataPrefix), Some(churned), mergeSchema = true))
       // the in-place erasure lane reaches every read, including both
       // sides of a changefeed — an erased row never surfaces
       if (!dvHasData(dir, dataPrefix)) pinned

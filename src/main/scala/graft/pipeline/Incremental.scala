@@ -410,7 +410,7 @@ object Incremental {
         .join(tomb.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
         .join(tomb.select(col("id").as("id_b")), Seq("id_b"), "left_anti"),
       dir, ledgerPrefix + "_next", newTag)
-    val led = spark.read.parquet(ledgerPath)
+    val led = Versioned.readObject(spark, ledgerPath)
     val ids = led.select(col("id_a").as("doc_id"))
       .unionAll(led.select(col("id_b").as("doc_id"))).distinct()
     graft.ext.Dedup.duplicateGroups(led, ids, "doc_id")
@@ -1202,8 +1202,8 @@ object Incremental {
       codesPrior.join(dIds, Seq("vec_id"), "left_anti")
         .unionByName(dCodes), dir, codesPrefix + "_next", newTag)
     Pq.ivfPqServe(queries,
-      spark.read.parquet(cellsPath),
-      spark.read.parquet(codesPath),
+      Versioned.readObject(spark, cellsPath),
+      Versioned.readObject(spark, codesPath),
       coarse, fine, dim, nProbe, m, subDim, k)
   }
 
@@ -1687,7 +1687,7 @@ object Incremental {
           .select(col("vec_id"), col("cid").as("cell")),
         dir, cellsPrefix + "_next", newTag)
     }
-    spark.read.parquet(publishedCells)
+    Versioned.readObject(spark, publishedCells)
       .groupBy(col("cell")).agg(count(lit(1)).as("n_vec"))
       .select(lit(path).as("path"), lit(tv).as("tv_milli"),
         col("cell"), col("n_vec"))
@@ -1735,7 +1735,7 @@ object Incremental {
           Seq("submission_id"), "left_anti")
         .unionByName(contrib),
       dir, statePrefix + "_next", newTag)
-    derivedExportProducts(spark.read.parquet(statePath), topN)
+    derivedExportProducts(Versioned.readObject(spark, statePath), topN)
   }
 
   /** The reference's derived export products from a published TAXON-grain
@@ -1827,7 +1827,7 @@ object Incremental {
         .join(tomb.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
         .join(tomb.select(col("id").as("id_b")), Seq("id_b"), "left_anti"),
       dir, ledgerPrefix + "_next", newTag)
-    val led = spark.read.parquet(ledgerPath)
+    val led = Versioned.readObject(spark, ledgerPath)
     val ids = led.select(col("id_a").as("doc_id"))
       .unionAll(led.select(col("id_b").as("doc_id"))).distinct()
     graft.ext.Dedup.duplicateGroups(led, ids, "doc_id")
@@ -1871,8 +1871,8 @@ object Incremental {
       codes.join(tomb, Seq("vec_id"), "left_anti"), dir,
       codesPrefix + "_next", newTag)
     Pq.ivfPqServe(queries,
-      spark.read.parquet(cellsPath),
-      spark.read.parquet(codesPath),
+      Versioned.readObject(spark, cellsPath),
+      Versioned.readObject(spark, codesPath),
       coarse, fine, dim, nProbe, m, subDim, k)
   }
 
@@ -1974,7 +1974,7 @@ object Incremental {
       .select(col("id")).distinct()
     val path = Versioned.write(state.join(tomb, Seq("id"), "left_anti"),
       dir, statePrefix + "_next", newTag)
-    bm25Serve(spark.read.parquet(path), qTerms, k)
+    bm25Serve(Versioned.readObject(spark, path), qTerms, k)
   }
 
   /** [[bm25IndexCycle]] over a BUCKET-PARTITIONED postings store — the

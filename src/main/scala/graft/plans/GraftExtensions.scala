@@ -17,6 +17,10 @@ import graft.functions.{CosineSim, LocScaleBSketch, PolyHash, SortedIntersectSiz
   * REQUIRED (every reference operator lowers onto stock Catalyst
   * plans), but the length-band strengthening of levenshtein predicates
   * is a free win for the J14 self-similarity join.
+  *
+  * And injects [[LiteralHoisting]] through the columnar-rule hook:
+  * filter comparison constants load from the reference array, so a
+  * read repeated with new ranges or keys compiles no new class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -24,6 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(_ => RangeJoinBinning)
     e.injectOptimizerRule(_ => SortedIntersectRewrite)
     e.injectPlannerStrategy(_ => IntervalOverlapStrategy)
+    e.injectColumnar(_ => LiteralHoistingColumnarRule)
     e.injectFunction((
       FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.Assertions._
@@ -145,6 +145,101 @@ class ReadPlanningSpec extends SparkTestBase {
     // data, zone, bloom, multi-zone and DV roots all probe as inferred
     assert(ReadPlanningSpec.assertProbeMatchesInference(spark, dir,
       "rp_root") == 7)
+  }
+
+  /** A one-root lake `dv_t` (partitions of `partOf(id div 300)`, keys
+    * `k` = id except every 97th id from 5 on, whose key is null) with
+    * two delete-vector generations: g2 erases every id divisible by 7
+    * plus a null key, g3 every id divisible by 11 outside the last
+    * partition. Returns the root's partition values, in order.
+    */
+  private def dvLake(dir: String, partOf: Column => Column): Seq[Any] = {
+    val df = spark.range(1200L).select($"id",
+      partOf(floor($"id" / 300).cast("int")).as("part"),
+      when($"id" % 97 === 5, lit(null).cast("long")).otherwise($"id").as("k"),
+      ($"id" * 2).as("v"))
+    LakeTable.commitSnapshot(spark, dir, "dv_root", "00000001_a",
+      Seq(LakeTable.RootPublish("dv_t", "part", df)))
+    val parts = spark.read.parquet(Versioned.snapshotRoot(dir, "dv_t"))
+      .select("part").distinct().orderBy("part").collect().map(_.get(0)).toSeq
+    Versioned.commitSnapshotDeleteVectors(spark, dir, "dv_root", "dv_t",
+      "part", "k", df.filter($"id" % 7 === 0 || $"id" === 5), "00000002_b")
+    val last = df.select(max($"part")).head().get(0)
+    Versioned.commitSnapshotDeleteVectors(spark, dir, "dv_root", "dv_t",
+      "part", "k", df.filter($"id" % 11 === 0 && $"part" =!= lit(last)),
+      "00000003_c")
+    parts
+  }
+
+  /** The anti-join twin of a `dv_t` read at `tag`: the pinned data
+    * minus the pinned vectors, joined on (part, k).
+    */
+  private def antiJoinTwin(dir: String, tag: String): DataFrame = {
+    val entries = Versioned.manifestAt(dir, "dv_root", tag).get
+    val data = Versioned.readSnapshotAt(spark, dir, "dv_t", "part",
+      Versioned.pinsIn(entries, "dv_t"), None)
+    val dvPins = Versioned.pinsIn(entries, Versioned.dvPrefix("dv_t"))
+    if (dvPins.isEmpty) data
+    else data.join(Versioned.readSnapshotAt(spark, dir,
+      Versioned.dvPrefix("dv_t"), "part", dvPins, None), Seq("part", "k"),
+      "left_anti")
+  }
+
+  test("pinned delete vectors apply as a plan filter ≡ the anti-join: Int, String and Date partitions") {
+    val kinds: Seq[(String, Column => Column)] = Seq(
+      "int" -> (b => b + 2020),
+      "string" -> (b => concat(lit("m"), b.cast("string"))),
+      "date" -> (b => date_add(lit("2024-01-01").cast("date"), b * 31)))
+    for ((kind, partOf) <- kinds) {
+      val dir = graft.core.Scratch.dir(s"read_planning_dv_$kind")
+      val parts = dvLake(dir, partOf)
+      def dvRead(asOf: Option[String] = None,
+                 ps: Option[Seq[Any]] = None) =
+        LakeTable.readTable(spark, dir, "dv_t", "part",
+          manifestPrefix = Some("dv_root"), asOfTag = asOf, parts = ps)
+      def check(what: String, got: DataFrame, want: DataFrame) = {
+        assert(got.queryExecution.optimizedPlan.collect {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+        }.isEmpty, s"$kind $what: the vectors applied as a join")
+        assert(rows(got, "id", "part", "k", "v") ==
+          rows(want, "id", "part", "k", "v"), s"$kind $what")
+      }
+      // the newest generation (g3) is a cold miss: its load is labelled
+      val (latest, cold) = jobsOf(dvRead())
+      assert(cold.nonEmpty && cold.forall(_.startsWith(
+        s"filestats.sidecarLoad ${Versioned.dvPrefix("dv_t")}")),
+        s"$kind: cold DV load jobs $cold")
+      check("latest", latest, antiJoinTwin(dir, "00000003_c"))
+      // only the returned partitions' vectors apply; the others' leaves
+      // are excluded, g3 pins none for the last partition
+      for (ps <- Seq(Seq(parts.head), Seq(parts(1), parts.last)))
+        check(s"parts $ps", dvRead(ps = Some(ps)),
+          antiJoinTwin(dir, "00000003_c").filter($"part".isin(ps: _*)))
+      // as-of g2 pins the OLDER vector generation, g1 none at all
+      check("as-of g2", dvRead(asOf = Some("00000002_b")),
+        antiJoinTwin(dir, "00000002_b"))
+      check("as-of g1", dvRead(asOf = Some("00000001_a")),
+        antiJoinTwin(dir, "00000001_a"))
+      // null keys on the data side survive every generation's vectors
+      assert(latest.filter($"k".isNull).count() == 13L, kind)
+    }
+  }
+
+  test("a warm read with pinned delete vectors runs its twin's jobs: no broadcast") {
+    val dir = graft.core.Scratch.dir("read_planning_dv_jobs")
+    fixture(dir)
+    def agg(df: DataFrame) = df.agg(count(lit(1)), sum($"v")).collect()
+    // g3 pins vectors on rp_z; g2 pins the same data without them
+    val withDv = read(dir, "rp_z")
+    val twin = read(dir, "rp_z", asOf = Some("00000002_b"))
+    agg(withDv); agg(twin)
+    val (_, dvJobs) = jobsOf(agg(read(dir, "rp_z")))
+    val (_, twinJobs) = jobsOf(agg(read(dir, "rp_z",
+      asOf = Some("00000002_b"))))
+    assert(!dvJobs.exists(_.startsWith("broadcast exchange")),
+      s"a warm DV read broadcast: $dvJobs")
+    assert(dvJobs.size == twinJobs.size,
+      s"DV read jobs $dvJobs vs its twin's $twinJobs")
   }
 
   test("no stale candidate set: correction commit, compaction + GC, sidecar file replaced in place") {
