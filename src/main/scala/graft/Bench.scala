@@ -54,6 +54,7 @@ object Bench {
     spark.range(4000000L).selectExpr("id % 9973 AS k", "id AS v")
       .groupBy("k").agg(org.apache.spark.sql.functions.sum("v")).count()
     runCanary()
+    val (compiles0, compileNs0) = Probe.compiles()
     val results = selected.zipWithIndex.map { case ((name, fn), qi) =>
       if (qi > 0 && qi % canaryEvery == 0) runCanary()
       val secs = (1 to reps).map { _ =>
@@ -86,6 +87,12 @@ object Bench {
         else secs.sorted.apply(secs.length / 2)
       name -> (secs.head, median)
     }.toMap
+    // code generation over the suite: a suite whose warm reps still
+    // compile is evicting classes from the compiled-class cache or
+    // writing constants into generated code
+    val (compiles1, compileNs1) = Probe.compiles()
+    System.err.println(f"[bench] codegen: ${compiles1 - compiles0} compiles, " +
+      f"${(compileNs1 - compileNs0) / 1e9}%.3f s compiling")
     runCanary()
     // canary dispersion: CV = stddev/mean over all canary runs
     def cvOf(xs: List[Double]): Double = {

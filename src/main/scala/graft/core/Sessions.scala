@@ -65,6 +65,35 @@ object Sessions {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         sys.env.getOrElse("SPARK_GRAFT_LIST_JOB_THRESHOLD", "512"))
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheMaxEntries.toString)
+      // a whole-stage class is named after its codegen stage id by
+      // default, and the cache keys on the source, name included. AQE
+      // numbers stages in the order it creates them, which follows the
+      // race between finishing stages, so the same pipeline recompiles
+      // under another id (q19 warm reps: 4 compiles in about one rep of
+      // ten). Unnamed, one pipeline is one class wherever it runs; the
+      // stage id stays in the plan and in a comment of the source.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Bound of Spark's compiled-class cache. Spark's default of 100 is
+    * smaller than one pass of the engine's own traffic: the `queries`
+    * perfbench working set is about 177 classes (q379 alone needs 186,
+    * the `lake` working set about 89), so the LRU evicted each class
+    * before its next use and every warm pass compiled 117–146 classes
+    * again. One pass of all 433 declared queries (sf0.001, local[4],
+    * cache unbounded) compiled 6,312 classes and grew Metaspace by
+    * 233 MB, at most about 37 KB per class (other class loading is
+    * included), so this bound costs at most about 300 MB of driver
+    * Metaspace.
+    *
+    * The conf is static: `CodeGenerator` reads it once, when the first
+    * code generation in the JVM initialises it, from the session active
+    * then. Every entry point builds its first session through
+    * [[configure]] before generating any code, so that session decides
+    * it for the JVM's lifetime; later sessions cannot change it.
+    */
+  val CodegenCacheMaxEntries = 8192
 
   /** Silence two benign but PROLIFIC warning sources that flood stderr
     * during a full Bench/Verify run and push the one-line JSON summary

@@ -124,17 +124,19 @@ object FileStats {
       case None => Versioned.readPartitioned(spark, dir,
         sidecarPrefix(dataPrefix))
     }
-    zoneCandidates(side, lo, hi)
+    zoneCandidates(side, lo, hi, lit)
   }
 
   /** The shared zone-map filter-and-collect: the filter runs where the
-    * sidecar rows are; only file names reach the driver.
+    * sidecar rows are; only file names reach the driver. `bound` makes
+    * the range constants (see [[pinnedSidecar]]).
     */
   private def zoneCandidates(side: DataFrame, lo: Option[Any],
-                             hi: Option[Any]): Seq[String] = {
+                             hi: Option[Any],
+                             bound: Any => Column): Seq[String] = {
     val overlap = Seq(
-      lo.map(v => col("max_v") >= lit(v)),
-      hi.map(v => col("min_v") <= lit(v))
+      lo.map(v => col("max_v") >= bound(v)),
+      hi.map(v => col("min_v") <= bound(v))
     ).flatten.reduceOption(_ && _).getOrElse(lit(true))
     // the all-null exclusion is sound ONLY under a real bound: a range
     // predicate never matches null, but an UNBOUNDED probe (lo and hi
@@ -312,7 +314,7 @@ object FileStats {
       case None => Versioned.readPartitioned(spark, dir,
         sidecarMultiPrefix(dataPrefix))
     }
-    side.filter(multiKeep(preds)).select(col("file"))
+    side.filter(multiKeep(preds, lit)).select(col("file"))
       .collect().map(_.getString(0)).toSeq.sorted
   }
 
@@ -322,12 +324,12 @@ object FileStats {
     * no constraint at all (see [[candidateFiles]]: the all-null
     * exclusion is only sound under a real bound).
     */
-  private def multiKeep(
-      preds: Seq[(String, Option[Any], Option[Any])]): Column =
+  private def multiKeep(preds: Seq[(String, Option[Any], Option[Any])],
+                        bound: Any => Column): Column =
     preds.map { case (c, lo, hi) =>
       val bounds = Seq(
-        lo.map(v => col(s"max_$c") >= lit(v)),
-        hi.map(v => col(s"min_$c") <= lit(v))).flatten
+        lo.map(v => col(s"max_$c") >= bound(v)),
+        hi.map(v => col(s"min_$c") <= bound(v))).flatten
       if (bounds.isEmpty) lit(true)
       else (bounds :+ (col("n_rows") > col(s"n_nulls_$c"))).reduce(_ && _)
     }.reduce(_ && _)
@@ -836,15 +838,25 @@ object FileStats {
 
   /** A sidecar's rows at explicit pins, restricted to `parts`, for
     * candidate planning: the cached driver-local frame when it applies,
-    * else the pinned distributed read.
+    * else the pinned distributed read. Paired with the constructor of
+    * the planning filter's bounds. On the driver-local frame the filter
+    * runs through a generated predicate, so a bound is a
+    * [[graft.plans.HoistedLiteral]]: a new range or key compiles
+    * nothing. On the distributed read a bound stays a real literal, so
+    * Parquet pushdown on the sidecar read sees it.
     */
   private def pinnedSidecar(spark: SparkSession, dir: String,
                             sidePrefix: String, pins: Map[String, String],
-                            parts: Option[Seq[Any]]): DataFrame = {
+                            parts: Option[Seq[Any]]): (DataFrame, Any => Column) = {
     val want = parts.map(_.map(_.toString))
     val sel = want.fold(pins)(vs => pins.filter(p => vs.contains(p._1)))
-    cachedSidecar(spark, dir, sidePrefix, sel).getOrElse(
-      Versioned.readSnapshotAt(spark, dir, sidePrefix, "part", pins, want))
+    cachedSidecar(spark, dir, sidePrefix, sel) match {
+      case Some(local) =>
+        (local, v => GraftShim.column(graft.plans.LiteralHoisting.constant(v)))
+      case None =>
+        (Versioned.readSnapshotAt(spark, dir, sidePrefix, "part", pins, want),
+          lit)
+    }
   }
 
   /** [[candidateFiles]] resolved through the newest manifest's sidecar
@@ -867,11 +879,11 @@ object FileStats {
                        dataPrefix: String,
                        sidecarPins: Map[String, String],
                        lo: Option[Any], hi: Option[Any],
-                       parts: Option[Seq[Any]] = None): Seq[String] =
-    zoneCandidates(
-      pinnedSidecar(spark, dir, sidecarPrefix(dataPrefix), sidecarPins,
-        parts),
-      lo, hi)
+                       parts: Option[Seq[Any]] = None): Seq[String] = {
+    val (side, bound) = pinnedSidecar(spark, dir, sidecarPrefix(dataPrefix),
+      sidecarPins, parts)
+    zoneCandidates(side, lo, hi, bound)
+  }
 
   /** Data-skipping read over a snapshot root, planned entirely from
     * the manifest: sidecar pins name the stats generation, the stats
@@ -1050,9 +1062,9 @@ object FileStats {
                             preds: Seq[(String, Option[Any], Option[Any])],
                             parts: Option[Seq[Any]] = None): Seq[String] = {
     require(preds.nonEmpty, "need at least one column predicate")
-    pinnedSidecar(spark, dir, sidecarMultiPrefix(dataPrefix), sidecarPins,
-        parts)
-      .filter(multiKeep(preds)).select(col("file"))
+    val (side, bound) = pinnedSidecar(spark, dir,
+      sidecarMultiPrefix(dataPrefix), sidecarPins, parts)
+    side.filter(multiKeep(preds, bound)).select(col("file"))
       .collect().map(_.getString(0)).toSeq.sorted
   }
 
@@ -1239,7 +1251,7 @@ object FileStats {
                             bloomPins: Map[String, String], value: Any,
                             parts: Option[Seq[Any]] = None): Seq[String] = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    pinnedSidecar(spark, dir, bloomPrefix(dataPrefix), bloomPins, parts)
+    pinnedSidecar(spark, dir, bloomPrefix(dataPrefix), bloomPins, parts)._1
       .filter(call_function("graft_bloom_might_contain",
         col("bloom"), lit(bloomHash(value))))
       .select(col("file"))
@@ -1262,7 +1274,7 @@ object FileStats {
         s"($MaxBatchedLookupKeys): that is a broadcast-join workload, " +
         "not a planning probe")
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    pinnedSidecar(spark, dir, bloomPrefix(dataPrefix), bloomPins, parts)
+    pinnedSidecar(spark, dir, bloomPrefix(dataPrefix), bloomPins, parts)._1
       .filter(call_function("graft_bloom_might_contain_any",
         col("bloom"), lit(values.map(bloomHash).toArray)))
       .select(col("file"))

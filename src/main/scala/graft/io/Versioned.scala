@@ -254,10 +254,41 @@ object Versioned {
     root
   }
 
-  /** Read the full partitioned state. */
+  /** Read the full partitioned state. Its data schema is read on the
+    * driver from ONE footer, of the first data file of the first
+    * partition directory in name order (a state is written by one
+    * writer, so its files share a schema), and handed to the reader;
+    * Spark appends the partition columns it infers from the paths, as
+    * schema inference does. So the read launches no schema-inference
+    * job. A root with no listable data file lets Spark infer.
+    */
   def readPartitioned(spark: SparkSession, dir: String,
-                      prefix: String): DataFrame =
-    spark.read.parquet(partitionedRoot(dir, prefix))
+                      prefix: String): DataFrame = {
+    val root = partitionedRoot(dir, prefix)
+    val conf = GraftShim.hadoopConf(spark)
+    firstDataFile(conf, new Path(root)) match {
+      case Some(f) =>
+        spark.read.schema(GraftShim.parquetFooterSchema(spark, conf, f))
+          .parquet(root)
+      case None => spark.read.parquet(root)
+    }
+  }
+
+  /** The first parquet data file under `dir`, depth first with entries
+    * in name order and hidden entries skipped; None when there is none
+    * or `dir` cannot be listed.
+    */
+  private def firstDataFile(conf: Configuration,
+                            dir: Path): Option[FileStatus] =
+    dataFiles(conf, dir).flatMap { files =>
+      files.headOption.orElse {
+        val subdirs = dir.getFileSystem(conf).listStatus(dir).toSeq
+          .filter(st => st.isDirectory && !hidden(st.getPath.getName))
+          .sortBy(_.getPath.getName)
+        subdirs.iterator.flatMap(st => firstDataFile(conf, st.getPath))
+          .nextOption()
+      }
+    }
 
   /** Read ONLY the named partitions of the state — the literal `isin`
     * filter resolves at PLAN time as a partition filter, so untouched

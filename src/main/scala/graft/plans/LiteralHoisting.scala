@@ -47,11 +47,17 @@ case class HoistedLiteral(value: Any, dataType: DataType) extends LeafExpression
   }
 }
 
-/** Physical rule: in each `FilterExec` comparison between an attribute
-  * and a non-null literal of a type `Literal.doGenCode` writes into the
-  * generated code (integral, floating, date and timestamp types), the
-  * literal becomes a [[HoistedLiteral]]. Repeated reads that differ
-  * only in their range or key constants then compile nothing new.
+/** Physical rule: in each `FilterExec` comparison with a non-null
+  * literal on either side, and in each `IN` list of a `FilterExec`, a
+  * literal of a type `Literal.doGenCode` writes into the generated code
+  * (integral, floating, date and timestamp types) becomes a
+  * [[HoistedLiteral]]. The other side of a comparison may be any
+  * expression: after `CollapseProject` a filter on a derived column
+  * compares the derivation itself (`unix_date(to_date(d)) >= 9000`).
+  * (An `IN` list longer than the optimizer's `InSet` threshold is
+  * already an `InSet`, whose set is a reference.) Repeated reads that
+  * differ only in their range or key constants then compile nothing
+  * new.
   *
   * Only the filter's own condition changes: a scan's partition and data
   * filters are separate expressions, so partition pruning and Parquet
@@ -68,27 +74,26 @@ object LiteralHoisting extends Rule[SparkPlan] {
     case _ => false
   }
 
-  private object Constant {
-    def unapply(e: Expression): Option[Literal] = e match {
-      case l @ Literal(v, dt) if v != null && hoistable(dt) => Some(l)
-      case _ => None
-    }
+  private def hoisted(e: Expression): Expression = e match {
+    case Literal(v, dt) if v != null && hoistable(dt) => HoistedLiteral(v, dt)
+    case _ => e
   }
 
-  private def hoist(l: Literal) = HoistedLiteral(l.value, l.dataType)
+  /** The constant `v` (a Scala or Java value, as `lit` takes it) as a
+    * [[HoistedLiteral]] when its type is one Spark writes into code,
+    * else as a plain literal.
+    */
+  def constant(v: Any): Expression = hoisted(Literal.create(v))
 
   private def hoistIn(condition: Expression): Expression = condition.transformUp {
-    case c: BinaryComparison => (c.left, c.right) match {
-      case (a: Attribute, Constant(l)) => c.withNewChildren(Seq(a, hoist(l)))
-      case (Constant(l), a: Attribute) => c.withNewChildren(Seq(hoist(l), a))
-      case _ => c
-    }
+    case c: BinaryComparison => c.withNewChildren(c.children.map(hoisted))
+    case in: In => in.copy(list = in.list.map(hoisted))
   }
 
   def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
     case f: FilterExec =>
-      val hoisted = hoistIn(f.condition)
-      if (hoisted fastEquals f.condition) f else f.copy(condition = hoisted)
+      val condition = hoistIn(f.condition)
+      if (condition fastEquals f.condition) f else f.copy(condition = condition)
   }
 }
 

@@ -6,6 +6,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
@@ -13,7 +14,8 @@ import scala.jdk.CollectionConverters._
 
 /** Package-membership shim: `classic.Dataset.ofRows` is `private[sql]`,
   * and constructing a DataFrame from a custom [[LogicalPlan]] node
-  * (graft's IntervalOverlapJoin) needs it. This is the standard
+  * (graft's IntervalOverlapJoin) needs it; so is the bridge from a
+  * Catalyst expression to a [[Column]]. This is the standard
   * extension-library technique — one object inside the `sql` package,
   * nothing else of Spark's internals touched.
   *
@@ -26,6 +28,9 @@ import scala.jdk.CollectionConverters._
 object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A column of the Catalyst expression `e`. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   /** The session's Hadoop configuration (session-level `spark.hadoop.*`
     * options applied), as Spark's own file sources see it.

@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import graft.plans.HoistedLiteral
 
 /** Filter literal hoisting ([[graft.plans.LiteralHoisting]]): a filter
-  * re-run with new range constants compiles no new class, returns the
+  * re-run with new range constants compiles no new class, also when it
+  * compares a derived expression or tests an `IN` list, returns the
   * rows a plain Scala filter of its input returns (NaN, −0.0 and nulls
   * included, AQE on and off), leaves the scan's pushed and partition
   * filters alone, and never lets two plans that differ in a constant
@@ -136,6 +137,37 @@ class LiteralHoistingSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       run(7)
       val added = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
       assert(added == 0, s"aqe=$aqe: a new constant compiled $added class(es)")
+    }
+  }
+
+  test("a filter on a derived expression or an IN list: a second constant after a warm-up compiles nothing, rows equal a Scala filter") {
+    // t's UTC day, and i + l: null when either input is
+    def day(r: Row): Option[Long] = Option(r.getAs[java.sql.Timestamp]("t"))
+      .map(t => Math.floorDiv(t.getTime, 86400000L))
+    def sum(r: Row): Option[Long] = for {
+      i <- Option(r.getAs[Any]("i")); l <- Option(r.getAs[Any]("l"))
+    } yield i.asInstanceOf[Int] + l.asInstanceOf[Long]
+    def want(f: Row => Boolean) = cells.filter(f).map(_.getAs[Long]("id")).sorted
+    val cases: Seq[(String, Long => Column, Long => Row => Boolean, Long, Long)] = Seq(
+      ("unix_date(to_date(t)) >= k", k => unix_date(to_date($"t")) >= lit(k.toInt),
+        k => r => day(r).exists(_ >= k), 3L, 6L),
+      ("i + l < k", k => $"i" + $"l" < lit(k),
+        k => r => sum(r).exists(_ < k), 50L * 1000000007L, 120L * 1000000007L),
+      ("i IN (k, k + 7, k + 14)", k => $"i".isin(k.toInt, k.toInt + 7, k.toInt + 14),
+        k => r => Option(r.getAs[Any]("i")).map(_.asInstanceOf[Int].toLong)
+          .exists(Set(k, k + 7, k + 14)), 7L, 35L))
+    for (aqe <- Seq(true, false)) withAqe(aqe) {
+      for ((name, cond, scala, k1, k2) <- cases) {
+        val warmUp = input.filter(cond(k1))
+        assert(ids(warmUp) == want(scala(k1)), s"aqe=$aqe $name, k=$k1")
+        assert(filters(warmUp).exists(f => hoisted(f).nonEmpty),
+          s"aqe=$aqe: $name kept its constant in generated code")
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val got = ids(input.filter(cond(k2)))
+        val added = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+        assert(got == want(scala(k2)), s"aqe=$aqe $name, k=$k2")
+        assert(added == 0, s"aqe=$aqe: $name with a new k compiled $added class(es)")
+      }
     }
   }
 

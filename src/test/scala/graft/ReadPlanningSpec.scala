@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -11,9 +12,9 @@ import graft.io.{FileStats, LakeTable, Versioned}
   * action — the schema comes from driver-side footer probes and the
   * sidecar candidate sets from cached sidecar rows. Every read is
   * row-equal to its hand-composed twin, a cold read's jobs are all
-  * attributed to the sidecar load, and the cache never serves a stale
-  * candidate set (new generations, compaction + GC, a sidecar file
-  * replaced in place).
+  * attributed to the sidecar load, a warm read with new ranges or keys
+  * compiles no class, and the cache never serves a stale candidate set
+  * (new generations, compaction + GC, a sidecar file replaced in place).
   */
 class ReadPlanningSpec extends SparkTestBase {
   import spark.implicits._
@@ -145,6 +146,62 @@ class ReadPlanningSpec extends SparkTestBase {
     // data, zone, bloom, multi-zone and DV roots all probe as inferred
     assert(ReadPlanningSpec.assertProbeMatchesInference(spark, dir,
       "rp_root") == 7)
+  }
+
+  test("warm readTable with new ranges and keys compiles nothing: zone, multi-zone, as-of, keys — each ≡ its twin") {
+    val dir = graft.core.Scratch.dir("read_planning_compiles")
+    val (g1, latest) = fixture(dir)
+    val alive = latest.filter($"id" % 7 =!= 0)
+    def range(c: String, lo: Long, hi: Long) =
+      (c, Some(lo): Option[Any], Some(hi): Option[Any])
+    // (read, its twin) per constant set; the first set warms the classes
+    val reads: Seq[(String, Seq[(() => DataFrame, DataFrame)])] = Seq(
+      "zone" -> Seq((3000L, 6000L), (106000L, 108000L)).map { case (lo, hi) =>
+        (() => read(dir, "rp_z", ranges = Seq(range("v", lo, hi))),
+          alive.filter($"v".between(lo, hi))) },
+      "multi-zone" -> Seq((3000L, 6000L, 900L), (7000L, 9500L, 2100L)).map {
+        case (lo, hi, id0) =>
+          (() => read(dir, "rp_m", ranges = Seq(range("v", lo, hi),
+            range("id", id0, id0 + 900L))),
+            latest.filter($"v".between(lo, hi) && $"id".between(id0, id0 + 900L)))
+      },
+      "as-of" -> Seq((6000L, 9000L), (1000L, 2500L)).map { case (lo, hi) =>
+        (() => read(dir, "rp_z", asOf = Some("00000001_a"),
+          ranges = Seq(range("v", lo, hi))),
+          g1.filter($"v".between(lo, hi))) },
+      "keys" -> Seq(Seq(3L, 77L, 1234L, 2500L, 3999L, 1001L),
+          Seq(5L, 90L, 1500L, 2222L, 3001L, 1002L)).map { ks =>
+        (() => read(dir, "rp_z", keys = Some(("id", ks))),
+          alive.filter($"id".isin(ks: _*))) })
+    for ((name, Seq((warmRead, warmTwin), (newRead, newTwin))) <- reads) {
+      assert(rows(warmRead()) == rows(warmTwin), s"$name: warm-up read")
+      assert(rows(warmRead()) == rows(warmTwin), s"$name: warm read")
+      val want = rows(newTwin)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val got = rows(newRead())
+      val added = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(got == want, s"$name: a read with new constants")
+      assert(added == 0, s"$name: new constants compiled $added class(es)")
+    }
+  }
+
+  test("an in-place partitioned read launches no schema job and reads the schema inference gives: String and Int partitions") {
+    val dir = graft.core.Scratch.dir("read_partitioned")
+    val df = mkData(1200).withColumn("y", ($"id" % 3).cast("int") + 2020)
+    for ((prefix, partCol) <- Seq("ip_s" -> "part", "ip_i" -> "y")) {
+      Versioned.overwriteTouchedPartitions(df, dir, prefix, partCol,
+        df.select(partCol).distinct().collect().map(_.get(0)).toSeq)
+      val (got, jobs) = jobsOf(Versioned.readPartitioned(spark, dir, prefix))
+      assert(jobs.isEmpty, s"$prefix: readPartitioned launched $jobs")
+      val inferred = spark.read.parquet(Versioned.partitionedRoot(dir, prefix))
+      assert(got.schema == inferred.schema, s"$prefix: ${got.schema} vs ${inferred.schema}")
+      assert(rows(got, "id", "part", "v", "y") == rows(df, "id", "part", "v", "y"))
+    }
+    // a root with no data file still reads through inference: the same
+    // error as before
+    val missing = intercept[org.apache.spark.sql.AnalysisException](
+      Versioned.readPartitioned(spark, dir, "ip_none"))
+    assert(missing.getMessage.nonEmpty)
   }
 
   /** A one-root lake `dv_t` (partitions of `partOf(id div 300)`, keys
